@@ -9,9 +9,11 @@ use dynamic partition overwrite (sources/writers.py).
 ``curate``   = E1 (curated_tranformation.py): clean 4 raw tables, convert
                currencies, build the 16-column denormalized join table.
 ``present``  = E2 (present_summary.py): compute all 7 metrics off the
-               curated table. The reference re-plans the curated scan for
-               every metric (6 separate JDBC re-reads, SURVEY.md §3 E2);
-               here the curated DF is cached once and fanned out.
+               curated table. The CLI (run.py) hands E1 to E2 through the
+               lake, as the reference does: it passes ``present`` the
+               curated tables read back from the parquet E1 just wrote, so
+               each metric scans that parquet instead of re-running the
+               raw-CSV parse, dedup and join chain.
 """
 
 from __future__ import annotations
@@ -65,10 +67,10 @@ def curate(
 def present(curated: DataFrame, listings: DataFrame) -> dict[str, DataFrame]:
     """Curated -> presentation: the 7 metric tables (M1-M7).
 
-    ``curated`` is cached before the fan-out — seven actions over one
-    materialization instead of seven source re-scans.
+    Nothing is cached: each metric plans its own scan of ``curated``. Pass
+    frames that are cheap to re-scan (the CLI reads them back from the
+    curated lake).
     """
-    curated = curated.cache()
     revenue = F.col("total_price_usd")
     return {
         "average_listing_price": metrics.avg_listing_price_weekly(

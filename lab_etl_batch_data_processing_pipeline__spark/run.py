@@ -8,9 +8,18 @@ Replaces the reference's two job scripts + Step Functions sequencing
         [--curated-only]
 
 Reads the four raw tables (CSV with the declared reference schemas, or
-parquet), runs raw -> curated -> presentation, and writes every output
-table as parquet under ``<out-dir>/curated`` and ``<out-dir>/presentation``
-with overwrite semantics (re-runs replace, never duplicate).
+parquet) and runs the two stages, writing every output table as parquet
+with overwrite semantics (re-runs replace, never duplicate):
+
+- E1 curates the raw tables and writes the 5 curated tables under
+  ``<out-dir>/curated``.
+- E2 reads ``curated_apartment_bookings`` and ``apartments`` back from
+  that lake (the reference's own E1 -> E2 handoff), so the raw-CSV parse,
+  dedup and join chain runs once per pass, not once more per metric. It
+  writes the 7 metric tables under ``<out-dir>/presentation``.
+
+The tables of a stage do not depend on one another, so each stage writes
+them concurrently; E2 starts only after every E1 write has succeeded.
 """
 
 from __future__ import annotations
@@ -18,8 +27,10 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from . import schemas
 from .plans.pipeline import curate, present
@@ -35,6 +46,24 @@ def _read_raw(spark: SparkSession, raw_dir: str, table: str, header: bool) -> Da
     return read_csv(
         spark, os.path.join(raw_dir, f"{table}.csv"), schemas.RAW_TABLES[table], header
     )
+
+
+def _write_stage(spark: SparkSession, tables: dict[str, DataFrame], root: str) -> None:
+    """Write ``tables`` to ``<root>/<name>`` concurrently, one thread per table.
+
+    The threads inherit the caller's Spark local properties (job group,
+    description), so ``cancelJobGroup`` and per-group job accounting cover
+    the writes. Every write is awaited; then the first failure, in table
+    order, is re-raised.
+    """
+    target = inheritable_thread_target(spark)(write_parquet)
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = [
+            pool.submit(target, df, os.path.join(root, name))
+            for name, df in tables.items()
+        ]
+    for future in futures:
+        future.result()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -75,16 +104,16 @@ def main(argv: list[str] | None = None) -> int:
         raw["bookings"],
         user_viewing,
     )
-    for name, df in curated.items():
-        write_parquet(df, os.path.join(args.out_dir, "curated", name))
+    curated_dir = os.path.join(args.out_dir, "curated")
+    _write_stage(spark, curated, curated_dir)
     print(f"curated: wrote {len(curated)} tables to {args.out_dir}/curated")
 
     if not args.curated_only:
         metric_tables = present(
-            curated["curated_apartment_bookings"], curated["apartments"]
+            read_parquet(spark, os.path.join(curated_dir, "curated_apartment_bookings")),
+            read_parquet(spark, os.path.join(curated_dir, "apartments")),
         )
-        for name, df in metric_tables.items():
-            write_parquet(df, os.path.join(args.out_dir, "presentation", name))
+        _write_stage(spark, metric_tables, os.path.join(args.out_dir, "presentation"))
         print(
             f"presentation: wrote {len(metric_tables)} metric tables to "
             f"{args.out_dir}/presentation"

@@ -32,7 +32,11 @@ from lab_etl_batch_data_processing_pipeline__spark.operators import dedup_fuzzy,
 def pair_space(prepared, threshold):
     """Replicate jaccard_near_dups' candidate join (no salt needed for
     counting — salt is output-invariant) and return the candidate frame
-    with exact jaccard per pair."""
+    with exact jaccard per pair.
+
+    The candidate count is faithful only while ``block_cap=None`` (the
+    default): this join omits the ``sub_tok`` key that ``_with_sub_tok``
+    adds, so with sub-blocking armed it overcounts the candidates."""
     a = prepared.alias("a")
     b = prepared.alias("b")
     sa, sb = F.size(F.col("a.tok_set")), F.size(F.col("b.tok_set"))
