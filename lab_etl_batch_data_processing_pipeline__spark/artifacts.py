@@ -55,15 +55,8 @@ def _ground_truth_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFram
     gates re-deriving brute force inline would triple the most expensive
     scan in the suite. Cache validity follows the IVF-index pattern
     (_SUCCESS of a plain parquet write; parameter in the tag)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}-k{k}"
-    )
-    gt_dir = os.path.join(
-        _REPO_ROOT, ".cache", "ann_gt", tag
-    )
+    tag = f"{_gen_tag(sf_dir, 'embeddings.parquet')}-k{k}"
+    gt_dir = os.path.join(_REPO_ROOT, ".cache", "ann_gt", tag)
     if not os.path.isfile(os.path.join(gt_dir, "_SUCCESS")):
         emb = _t(spark, sf_dir, "embeddings")
         similarity.cosine_topk_bruteforce(emb, _query_vectors(emb), k=k).select(
@@ -73,60 +66,16 @@ def _ground_truth_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFram
 
 
 
-# deterministic=True since r10: the coarse quantizer is the engine's
-# exact-integer Lloyd (clustering.kmeans_fit) instead of pyspark.ml
-# KMeans, so the probed top-k has a DuckDB value-hash twin (seed is
-# unused on that path but kept in the tag for cache continuity).
+#: "seed" and "deterministic" are read only by perfbench's set-up call,
+#: which passes them to build_ivf_index's compatibility keywords; the
+#: exact-integer Lloyd reads neither.
 _IVF_PARAMS = {"nlist": 8, "seed": 42, "max_iter": 4, "deterministic": True}
 
 
-def _validated_index_dir(path: str, expected: dict) -> str:
-    """Self-healing stale-marker check for the MANAGED index cache dirs.
-
-    Builders write the _BUILT sentinel with their build params and
-    probes fail loudly on a contradiction (similarity._check_built) —
-    the right behavior for a hand-pointed index_dir, where silently
-    rebuilding would hide a caller bug. But for the cache dirs these
-    helpers hand out, a contradicting (or pre-JSON) marker can only be
-    a stale artifact from an older build recipe — r10's parameter
-    migration left an sf0.01 IVF dir carrying kind=ivf under a -det
-    directory tag, and every probe of it raised. The driver's vanilla
-    correctness session never runs prebuild_indexes, so it cannot heal
-    itself; the helper therefore deletes the contradicted dir, and the
-    consumer takes the same inline-build path it takes when no index
-    exists (bit-identical values by the artifact contract). Markers
-    missing a key are trusted on that key — older recipes recorded
-    fewer params. Marker semantics mirror similarity._check_built
-    (r12 ADVICE): legacy plain-text sentinels ("ok" / "ok residual")
-    recorded only the residual flag and are validated on just that
-    key rather than treated as stale, and a transient OSError while
-    reading leaves the dir alone — the probe's _check_built makes the
-    final call, so a momentary read failure cannot destroy a valid
-    cache.
-    """
-    marker = os.path.join(path, "_BUILT")
-    try:
-        with open(marker) as fh:
-            content = fh.read().strip()
-    except FileNotFoundError:
-        return path
-    except OSError:
-        return path  # transient read failure: let the probe decide
-    try:
-        built = json.loads(content)
-        if not isinstance(built, dict):
-            raise ValueError
-    except ValueError:
-        if content in ("ok", "ok residual"):
-            # legacy sentinel: trusted exactly as _check_built trusts it
-            built = {"residual": content == "ok residual"}
-        else:
-            built = None  # unrecognized marker: not a current-recipe build
-    if not isinstance(built, dict) or any(
-        key in built and built[key] != val for key, val in expected.items()
-    ):
-        shutil.rmtree(path, ignore_errors=True)
-    return path
+# Index dir tags end in "-lloyd", which no earlier recipe wrote (the
+# float-KMeans dirs carried a seed "-s42" and no suffix, the first
+# exact-integer ones "-s42...-det"), so a live tag never finds an index
+# built by an older recipe.
 
 
 def _ivf_index_dir(sf_dir: str) -> str:
@@ -137,81 +86,38 @@ def _ivf_index_dir(sf_dir: str) -> str:
     cache. This is the at-scale operating shape: the index is built once
     (offline job), queries only probe it.
     """
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     p = _IVF_PARAMS
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}"
-        f"-nl{p['nlist']}-s{p['seed']}-it{p['max_iter']}"
-        f"{'-det' if p['deterministic'] else ''}"
-    )
-    return _validated_index_dir(
-        os.path.join(_REPO_ROOT, ".cache", "ivf", tag),
-        # what cosine_topk_ivf's probe-time _check_built asserts
-        {"kind": "ivf-det" if p["deterministic"] else "ivf"},
+    tag = _gen_tag(sf_dir, "embeddings.parquet")
+    return os.path.join(
+        _REPO_ROOT, ".cache", "ivf", f"{tag}-nl{p['nlist']}-it{p['max_iter']}-lloyd"
     )
 
 
-# deterministic=True since r10 (the IVF precedent): codebooks + codes
-# from the exact-integer Lloyd, so the probed top-k has a DuckDB twin.
-_PQ_PARAMS = {
-    "m": 16, "ksub": 32, "seed": 42, "rerank": 100, "deterministic": True,
-}
+_PQ_PARAMS = {"m": 16, "ksub": 32, "rerank": 100}
 
 
 def _pq_index_dir(sf_dir: str) -> str:
     """Repo-local cache dir for the materialized PQ index (codebooks +
     encoded corpus) of one corpus — same keying contract as
     _ivf_index_dir: sf name + source mtime/size + build parameters."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     p = _PQ_PARAMS
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}"
-        f"-m{p['m']}-k{p['ksub']}-s{p['seed']}"
-        f"{'-det' if p['deterministic'] else ''}"
-    )
-    return _validated_index_dir(
-        os.path.join(_REPO_ROOT, ".cache", "pq", tag),
-        # what cosine_topk_pq's probe-time _check_built asserts
-        {
-            "kind": "pq-det" if p["deterministic"] else "pq",
-            "m": p["m"],
-            "ksub": p["ksub"],
-        },
+    tag = _gen_tag(sf_dir, "embeddings.parquet")
+    return os.path.join(
+        _REPO_ROOT, ".cache", "pq", f"{tag}-m{p['m']}-k{p['ksub']}-lloyd"
     )
 
 
-_IVFPQ_PARAMS = {
-    "nlist": 8, "nprobe": 3, "m": 16, "ksub": 32, "seed": 42, "rerank": 100,
-    "deterministic": True,  # r10: same rationale as _PQ_PARAMS
-}
+_IVFPQ_PARAMS = {"nlist": 8, "nprobe": 3, "m": 16, "ksub": 32, "rerank": 100}
 
 
 def _ivfpq_index_dir(sf_dir: str) -> str:
     """Cache dir for the composed IVF×PQ index (coded cells + centroids
     + codebooks) — same keying contract as _ivf_index_dir."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     p = _IVFPQ_PARAMS
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}"
-        f"-nl{p['nlist']}-m{p['m']}-k{p['ksub']}-s{p['seed']}"
-        f"{'-det' if p['deterministic'] else ''}"
-    )
-    return _validated_index_dir(
-        os.path.join(_REPO_ROOT, ".cache", "ivfpq", tag),
-        # what cosine_topk_ivfpq's probe-time _check_built asserts; the
-        # registry probes take the residual=False default
-        {
-            "kind": "ivfpq-det" if p["deterministic"] else "ivfpq",
-            "m": p["m"],
-            "ksub": p["ksub"],
-            "residual": False,
-        },
+    tag = _gen_tag(sf_dir, "embeddings.parquet")
+    return os.path.join(
+        _REPO_ROOT, ".cache", "ivfpq",
+        f"{tag}-nl{p['nlist']}-m{p['m']}-k{p['ksub']}-lloyd",
     )
 
 
@@ -405,9 +311,7 @@ def sweep_stale_caches(sf_dir: str) -> None:
     # index/ground-truth families carry param-suffixed generation tags;
     # their dir helpers are the single source of the live tag
     try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        sf_name = os.path.basename(os.path.normpath(sf_dir))
-        gt_keep = f"{sf_name}-{int(st.st_mtime)}-{st.st_size}-k5"
+        gt_keep = f"{_gen_tag(sf_dir, 'embeddings.parquet')}-k5"
         _sweep_stale_cache(os.path.join(base, ".cache", "ann_gt"), keep=gt_keep)
         for dir_fn in (_ivf_index_dir, _pq_index_dir, _ivfpq_index_dir):
             live = dir_fn(sf_dir)
@@ -482,48 +386,36 @@ def prebuild_indexes(spark: SparkSession, sf_dir: str) -> None:
     sweep_stale_caches(sf_dir)
     _ground_truth_topk(spark, sf_dir, k=5)
     pq_dir = _pq_index_dir(sf_dir)
-    if not os.path.isfile(os.path.join(pq_dir, "_BUILT")):
-        p = _PQ_PARAMS
+    p = _PQ_PARAMS
+    if not similarity._check_built(
+        pq_dir, kind="pq-det", m=p["m"], ksub=p["ksub"]
+    ):
         similarity.build_pq_index(
-            _t(spark, sf_dir, "embeddings"), pq_dir,
-            m=p["m"], ksub=p["ksub"], seed=p["seed"],
-            deterministic=p["deterministic"],
+            _t(spark, sf_dir, "embeddings"), pq_dir, m=p["m"], ksub=p["ksub"]
         )
     ivfpq_dir = _ivfpq_index_dir(sf_dir)
-    if not os.path.isfile(os.path.join(ivfpq_dir, "_BUILT")):
-        p = _IVFPQ_PARAMS
-        # the flat-PQ index above trained identical codebooks AND codes
-        # (same m/ksub/quantizer over the same corpus) — reuse both
-        # instead of re-running the m fits (on the deterministic path
-        # the reuse is exact by construction, not just same-seed luck)
+    p = _IVFPQ_PARAMS
+    if not similarity._check_built(
+        ivfpq_dir, kind="ivfpq-det", m=p["m"], ksub=p["ksub"]
+    ):
+        # the flat-PQ index above fitted identical codebooks AND codes
+        # (same m/ksub, same Lloyd over the same corpus) — reuse both
+        # instead of re-running the fit
         shared_cb = shared_codes = None
-        if (
-            p["m"] == _PQ_PARAMS["m"]
-            and p["ksub"] == _PQ_PARAMS["ksub"]
-            and p["seed"] == _PQ_PARAMS["seed"]
-            and p["deterministic"] == _PQ_PARAMS["deterministic"]
-        ):
+        if p["m"] == _PQ_PARAMS["m"] and p["ksub"] == _PQ_PARAMS["ksub"]:
             shared_cb, shared_codes = similarity.read_pq_index(spark, pq_dir)
         similarity.build_ivfpq_index(
             _t(spark, sf_dir, "embeddings"), ivfpq_dir,
-            nlist=p["nlist"], m=p["m"], ksub=p["ksub"], seed=p["seed"],
+            nlist=p["nlist"], m=p["m"], ksub=p["ksub"],
             codebooks=shared_cb, encoded=shared_codes,
-            deterministic=p["deterministic"],
         )
     index_dir = _ivf_index_dir(sf_dir)
-    # The _BUILT sentinel is written after BOTH index writes complete
-    # (partitioned writes leave no root _SUCCESS under dynamic partition
-    # overwrite); a partial directory from an interrupted build must not
-    # pass for a valid index.
-    if not os.path.isfile(os.path.join(index_dir, "_BUILT")):
-        emb = _t(spark, sf_dir, "embeddings")
+    if not similarity._check_built(index_dir, kind="ivf-det"):
         similarity.build_ivf_index(
-            emb,
+            _t(spark, sf_dir, "embeddings"),
             nlist=_IVF_PARAMS["nlist"],
-            seed=_IVF_PARAMS["seed"],
             max_iter=_IVF_PARAMS["max_iter"],
             index_dir=index_dir,
-            deterministic=_IVF_PARAMS["deterministic"],
         )
     # Shared dedup sketches: tokenize/shingle-hash the documents table
     # ONCE per generation; every Jaccard/MinHash consumer then reads the

@@ -154,8 +154,8 @@ def kmeans_fit(
     cluster, dist_sq), one row per input vector sorted by id, plus the
     final k integer centroid vectors in the fix-point domain
     (``round((x + shift) * scale)``) — the piece an IVF index builder
-    needs beyond the assignment (similarity.build_ivf_index
-    deterministic=True).
+    needs beyond the assignment (similarity.build_ivf_index, the
+    quantizer of every IVF / IVF×PQ index and of semantic_dedup).
 
     Deterministic rule set (the oracle replicates each):
     - init: centroids 0..k-1 are the scaled vectors of the k smallest

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two paths, as the scale story demands:
+Three kinds of top-k search:
 
 - :func:`cosine_topk_bruteforce` — exact top-k. The query set is broadcast
   (it is small by construction); candidates stream map-side through a
@@ -14,10 +14,19 @@ Two paths, as the scale story demands:
   ``num_planes``/``num_tables``. Plane projections use a deterministic
   hash-derived pseudo-random matrix, so results are reproducible without
   shipping a random state.
+- Index paths — IVF (:func:`cosine_topk_ivf`), PQ (:func:`cosine_topk_pq`)
+  and IVF×PQ (:func:`cosine_topk_ivfpq`), plus :func:`semantic_dedup` on
+  the IVF cells. Every quantizer is the exact-integer Lloyd
+  (clustering.kmeans_fit / kmeans_fit_grouped), so cells, codebooks and
+  codes are bit-identical on any engine that follows its rules and each
+  probe has a DuckDB value-hash twin. Indexes materialize under an
+  ``index_dir`` with a ``_BUILT`` marker written last (see
+  :func:`_check_built`).
 
-Both paths are pure built-in higher-order expressions (no UDF); a Pandas
-UDF with numpy matmul is the documented alternative when vectors get wide
-enough (>~1k dims) that per-element codegen loses to BLAS.
+The search expressions are pure built-in higher-order expressions (no
+UDF); a Pandas UDF with numpy matmul (:func:`cosine_topk_pandas`) is the
+alternative when vectors get wide enough (>~1k dims) that per-element
+codegen loses to BLAS.
 """
 
 from __future__ import annotations
@@ -564,29 +573,41 @@ def cosine_near_dups(
 
 
 def _write_built(index_dir: str, **params) -> None:
-    """Write the build sentinel LAST (partitioned/overwrite writes leave
+    """Write the build marker LAST (partitioned/overwrite writes leave
     no trustworthy root _SUCCESS), recording the build parameters as JSON
     so a probe with mismatching args fails loudly instead of silently
     mis-scoring (e.g. LUT indexed with the probe's ksub against codes
-    encoded with another, or the residual centroid-dot term added/dropped
-    by the caller's flag against a differently-built index)."""
+    encoded with another).
+
+    One ``kind`` per index family: ``ivf-det``, ``pq-det``,
+    ``ivfpq-det`` — the names the exact-integer Lloyd builds have always
+    written. Float-KMeans indexes from before it carry the bare family
+    name, so :func:`_check_built` refuses them instead of probing cells
+    no oracle replays."""
     with open(os.path.join(index_dir, "_BUILT"), "w") as marker:
         json.dump(params, marker)
 
 
-def _check_built(index_dir: str, **expected) -> None:
-    """Assert a probe's args match the materialized index's recorded
-    build params. Legacy plain-text sentinels ("ok" / "ok residual")
-    recorded only the residual flag — validate what they carry rather
-    than invalidating existing caches."""
-    with open(os.path.join(index_dir, "_BUILT")) as marker:
-        content = marker.read().strip()
+def _check_built(index_dir: str, **expected) -> bool:
+    """Whether ``index_dir`` holds a finished index for a probe expecting
+    ``expected`` build params — the one marker rule of every index family.
+
+    - A missing or unparseable _BUILT marker means "not built" (a build
+      that never finished, or a marker cut short): returns False and the
+      caller builds over the dir.
+    - A marker recording a different value for an expected key raises
+      ValueError: probing a differently-built index mis-scores silently.
+      Keys the marker does not record are not checked.
+    - Any other read error (an OSError that is not FileNotFoundError)
+      propagates; nothing is deleted.
+    """
     try:
-        built = json.loads(content)
-        if not isinstance(built, dict):
-            raise ValueError
-    except ValueError:
-        built = {"residual": content == "ok residual"}
+        with open(os.path.join(index_dir, "_BUILT")) as marker:
+            built = json.load(marker)
+    except (FileNotFoundError, ValueError):
+        return False
+    if not isinstance(built, dict):
+        return False
     mismatched = {
         key: {"built": built[key], "probe": expected[key]}
         for key in expected
@@ -598,6 +619,7 @@ def _check_built(index_dir: str, **expected) -> None:
             f"than the probe asks for: {mismatched}; rebuild the index "
             "or fix the probe args"
         )
+    return True
 
 
 def build_ivf_index(
@@ -605,135 +627,90 @@ def build_ivf_index(
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     max_iter: int = 4,
     index_dir: str | None = None,
-    deterministic: bool = False,
+    *,
+    seed: int | None = None,
+    deterministic: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Build an IVF (inverted-file) ANN index: returns ``(inverted,
     centroids)``.
 
     Vectors are L2-normalized (so euclidean k-means order matches cosine
-    order) and clustered into ``nlist`` cells; each corpus vector is
-    assigned to its cell (the inverted file). The centroid table is
-    nlist rows — the only non-DataFrame state, bounded by construction.
-    Iterations are bounded low: an IVF index needs rough cells, not
-    converged clusters.
-
-    Two coarse quantizers, same probe math either way:
-
-    - ``deterministic=False`` (default): pyspark.ml KMeans (seeded
-      k-means|| init) — the float fast path; cell assignment is
-      engine-specific, so quality is pinned by recall gates only.
-    - ``deterministic=True``: the engine's exact-integer Lloyd
-      (clustering.kmeans_fit — fix-point BIGINTs, k-smallest-id init,
-      ``iters=max_iter``; ``seed`` unused). Bit-identical on any engine
-      that follows the rule, so the FULL probe output is value-hash
-      oracle-able in DuckDB (query key ann_cosine_ivf since r10); the
-      centroid table converts the integer centroids back to the
-      normalized-vector domain (c/scale - 1) for the probe ranking.
+    order) and clustered into ``nlist`` cells by the exact-integer Lloyd
+    (clustering.kmeans_fit — fix-point BIGINTs, k-smallest-id init,
+    ``iters=max_iter``); each corpus vector is assigned to its cell (the
+    inverted file). Cells are bit-identical on any engine that follows
+    the rule, so the FULL probe output is value-hash oracle-able in
+    DuckDB (query key ann_cosine_ivf). The centroid table is nlist rows —
+    the only non-DataFrame state, bounded by construction — converted
+    back from the integer domain to normalized vectors (c/scale - 1) for
+    the probe ranking. Iterations are bounded low: an IVF index needs
+    rough cells, not converged clusters.
 
     With ``index_dir`` the inverted file and centroid table are
     materialized as parquet and read back — the at-scale shape, where
     the index build is a separate offline job and queries only probe.
-    Without it the frames are returned in-memory (the featurized cache
-    used during the fit is unpersisted before returning either way; the
-    one recompute of the normalization projection at query time is
-    cheaper than leaking executor memory in a long-lived session).
+    Without it the frames are returned in-memory.
+
+    ``seed`` and ``deterministic`` remain for callers of the earlier
+    two-quantizer signature: ``seed`` is unused, and
+    ``deterministic=False`` (the retired pyspark.ml KMeans quantizer)
+    raises ValueError.
     """
+    if not deterministic:
+        raise ValueError(
+            "build_ivf_index: the pyspark.ml KMeans quantizer was retired; "
+            "the exact-integer Lloyd is the only IVF quantizer"
+        )
+    from . import clustering
 
     def normalized(col):
         norm = l2_norm(col)
         return F.transform(col, lambda x: x.cast("double") / norm)
 
-    if deterministic:
-        from . import clustering
-
-        scale = 1 << 20
-        assignment, int_centroids = clustering.kmeans_fit(
-            ensure_parallelism(corpus).select(
-                F.col(id_col), normalized(F.col(vec_col)).alias("__nvec")
-            ),
-            id_col,
-            "__nvec",
-            k=nlist,
-            iters=max_iter,
-            scale=scale,
-            shift=1.0,
-        )
-        inverted = corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm(F.col(vec_col)).alias("__c_norm"),
-        ).join(
-            assignment.select(
-                F.col("id").alias(id_col), F.col("cluster").alias("cell")
-            ),
-            id_col,
-        )
-        centroid_rows = [
-            (cid, [x / scale - 1.0 for x in c])
-            for cid, c in enumerate(int_centroids)
-        ]
-        centroid_df = corpus.sparkSession.createDataFrame(
-            centroid_rows, "cell int, centroid array<double>"
-        )
-        if index_dir is not None:
-            spark = corpus.sparkSession
-            inverted.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{index_dir}/inverted"
-            )
-            centroid_df.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-            _write_built(
-                index_dir, kind="ivf-det", nlist=nlist, iters=max_iter
-            )
-            return read_ivf_index(spark, index_dir)
-        return inverted, centroid_df
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # Cache the featurized corpus for the duration of the fit: k-means
-    # re-scans its input every iteration, and without the cache each scan
-    # re-reads the source and re-normalizes.
-    featurized = ensure_parallelism(corpus).select(
+    scale = 1 << 20
+    assignment, int_centroids = clustering.kmeans_fit(
+        ensure_parallelism(corpus).select(
+            F.col(id_col), normalized(F.col(vec_col)).alias("__nvec")
+        ),
+        id_col,
+        "__nvec",
+        k=nlist,
+        iters=max_iter,
+        scale=scale,
+        shift=1.0,
+    )
+    inverted = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        array_to_vector(normalized(F.col(vec_col))).alias("features"),
+        l2_norm(F.col(vec_col)).alias("__c_norm"),
+    ).join(
+        assignment.select(
+            F.col("id").alias(id_col), F.col("cluster").alias("cell")
+        ),
+        id_col,
     )
-    featurized.persist()
-    try:
-        model = KMeans(
-            k=nlist, seed=seed, featuresCol="features", maxIter=max_iter
-        ).fit(featurized)
-        inverted = model.transform(featurized).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("prediction").alias("cell"),
-            l2_norm(F.col(vec_col)).alias("__c_norm"),
+    centroid_rows = [
+        (cid, [x / scale - 1.0 for x in c])
+        for cid, c in enumerate(int_centroids)
+    ]
+    centroid_df = corpus.sparkSession.createDataFrame(
+        centroid_rows, "cell int, centroid array<double>"
+    )
+    if index_dir is not None:
+        spark = corpus.sparkSession
+        # Partition the inverted file by cell: a probe of nprobe cells
+        # then reads only nprobe/nlist of the index (partition pruning).
+        inverted.write.mode("overwrite").partitionBy("cell").parquet(
+            f"{index_dir}/inverted"
         )
-        centroids = model.clusterCenters()  # nlist x dim, tiny
-        centroid_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        centroid_df = corpus.sparkSession.createDataFrame(
-            centroid_rows, "cell int, centroid array<double>"
+        centroid_df.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+        _write_built(
+            index_dir, kind="ivf-det", nlist=nlist, iters=max_iter
         )
-        if index_dir is not None:
-            spark = corpus.sparkSession
-            # Partition the inverted file by cell: a probe of nprobe cells
-            # then reads only nprobe/nlist of the index (partition pruning).
-            inverted.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{index_dir}/inverted"
-            )
-            centroid_df.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-            # Explicit build sentinel, written LAST: partitioned writes
-            # under dynamic partition-overwrite leave no root _SUCCESS
-            # marker, and a bare isdir check would accept an interrupted
-            # build forever. The sentinel exists iff both writes finished.
-            _write_built(index_dir, kind="ivf", nlist=nlist, seed=seed)
-            return read_ivf_index(spark, index_dir)
-        return inverted, centroid_df
-    finally:
-        featurized.unpersist()
+        return read_ivf_index(spark, index_dir)
+    return inverted, centroid_df
 
 
 def read_ivf_index(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -809,32 +786,24 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    seed: int = 42,
     max_iter: int = 4,
     index_dir: str | None = None,
-    deterministic: bool = False,
 ) -> DataFrame:
     """IVF approximate cosine top-k — build (or reuse) the index, then
     probe. Convenience wrapper over :func:`build_ivf_index` +
     :func:`cosine_topk_ivf_probe`; at scale call those separately (the
     index build is an offline job, queries only probe the materialized
     inverted file). With ``index_dir``, an existing materialized index is
-    reused and the KMeans fit is skipped entirely."""
+    reused and the Lloyd fit is skipped entirely."""
 
-    if index_dir is not None and os.path.isfile(f"{index_dir}/_BUILT"):
-        # kind only: nlist is a BUILD parameter — the probe reads the
-        # centroid table from disk, so a default-nlist caller probing a
-        # 32-cell index is perfectly correct (only nprobe affects probe
-        # math; seed likewise doesn't and isn't checked). The kind DOES
-        # distinguish the deterministic quantizer: its cells are part of
-        # the oracle contract, so probing a float-KMeans index where the
-        # caller expects the exact-integer one must fail loudly.
-        _check_built(index_dir, kind="ivf-det" if deterministic else "ivf")
+    # kind only: nlist is a BUILD parameter — the probe reads the
+    # centroid table from disk, so a default-nlist caller probing a
+    # 32-cell index is perfectly correct (only nprobe affects probe math)
+    if index_dir is not None and _check_built(index_dir, kind="ivf-det"):
         inverted, centroid_df = read_ivf_index(corpus.sparkSession, index_dir)
     else:
         inverted, centroid_df = build_ivf_index(
-            corpus, nlist, id_col, vec_col, seed, max_iter, index_dir,
-            deterministic,
+            corpus, nlist, id_col, vec_col, max_iter, index_dir
         )
     return cosine_topk_ivf_probe(
         inverted, centroid_df, queries, k, nprobe, id_col, vec_col, query_id_col
@@ -847,7 +816,6 @@ def semantic_dedup(
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     max_iter: int = 4,
     index_dir: str | None = None,
 ) -> DataFrame:
@@ -870,9 +838,10 @@ def semantic_dedup(
     where one precedes the other, and (b) every non-member dominated by
     an earlier member of S — the same min-id canonicalization as the
     Jaccard funnels, so reruns and engines agree given the cell
-    assignment (KMeans is seeded with bounded iterations, and the
-    at-scale path probes a MATERIALIZED index, where assignment is
-    read, not recomputed).
+    assignment. The cells are :func:`build_ivf_index`'s exact-integer
+    Lloyd cells — the same cells the IVF probe reads — whether they are
+    built in memory or read from a materialized index, so the report is
+    identical with and without one.
 
     Scale shape: cells are the unit of work (applyInPandas per cell,
     numpy kept-matrix @ vector products — O(|cell| x |kept| x dim) per
@@ -881,35 +850,24 @@ def semantic_dedup(
     IVF probe path). Nothing quadratic in the corpus materializes — the
     verify joins in the gate query run over kept-only or dropped-only
     slices. Reuses a materialized IVF index (``index_dir``, _BUILT
-    sentinel contract) so the clustering is an offline artifact shared
-    with the ANN family; without one it builds in-memory cells.
+    marker contract, built there when absent) so the clustering is an
+    offline artifact shared with the ANN family; without one it builds
+    in-memory cells.
     """
     import numpy as np
     import pandas as pd
 
-    if index_dir is not None and os.path.isfile(f"{index_dir}/_BUILT"):
-        # either quantizer's cells are valid here: semantic dedup only
-        # needs SOME bounded partition of the vector space, and the
-        # greedy min-id rule is deterministic GIVEN the materialized
-        # cell assignment (which is read, not recomputed) — unlike the
-        # IVF probe, whose oracle replays the deterministic quantizer.
-        with open(f"{index_dir}/_BUILT") as marker:
-            kind = (json.load(marker) or {}).get("kind")
-        if kind not in ("ivf", "ivf-det"):
-            raise ValueError(
-                f"index at {index_dir} is not an IVF inverted file "
-                f"(kind={kind!r})"
-            )
+    if index_dir is not None and _check_built(index_dir, kind="ivf-det"):
         inverted, _ = read_ivf_index(corpus.sparkSession, index_dir)
     elif nlist <= 1:
         # global greedy (no clustering): exact, single cell — the small-
-        # corpus / unit-test form; KMeans itself requires k >= 2
+        # corpus / unit-test form
         inverted = corpus.select(
             F.col(id_col), F.col(vec_col), F.lit(0).alias("cell")
         )
     else:
         inverted, _ = build_ivf_index(
-            corpus, nlist, id_col, vec_col, seed, max_iter, index_dir
+            corpus, nlist, id_col, vec_col, max_iter, index_dir
         )
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1007,157 +965,6 @@ def cosine_topk_pandas(
     )
 
 
-def build_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 4,
-    normalize: bool = True,
-) -> DataFrame:
-    """Train product-quantization codebooks: returns (subspace, code,
-    centroid array<double>) — m * ksub rows, the only non-DataFrame-scale
-    state (like the IVF centroid table).
-
-    Vectors are L2-normalized and split into ``m`` contiguous subvectors
-    of dim/m dims; each subspace gets an independent KMeans codebook of
-    ``ksub`` centroids (Jégou et al., "Product Quantization for Nearest
-    Neighbor Search", TPAMI'11 — public method). A PQ code is then m
-    bytes per vector vs 4*dim for float32: at dim=64/m=8 a 32x smaller
-    index, the memory lever that keeps billion-scale ANN in RAM.
-
-    The m fits scan one cached featurized projection (build-time only —
-    at scale this is an offline job, like build_ivf_index).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    first = corpus.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError(
-            "PQ: cannot train codebooks on an empty corpus / NULL embedding"
-        )
-    dim = len(first[0])
-    if dim % m:
-        raise ValueError(f"PQ: dim {dim} not divisible by m {m}")
-    if ksub > 128:
-        # codes run 0..ksub-1 and are stored as tinyint (1 byte/subspace
-        # — the whole point of PQ); ksub=128 (max code 127) still fits,
-        # anything larger would wrap negative in the cast
-        raise ValueError(
-            f"PQ: ksub {ksub} exceeds tinyint code range (max 128 codes)"
-        )
-    dsub = dim // m
-
-    if normalize:
-        norm = l2_norm(F.col(vec_col))
-        vec = F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)
-    else:  # caller supplies residual / pre-normalized vectors
-        vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    featurized = ensure_parallelism(corpus).select(
-        *[
-            array_to_vector(F.slice(vec, j * dsub + 1, dsub)).alias(
-                f"__sub{j}"
-            )
-            for j in range(m)
-        ]
-    )
-    featurized.persist()
-    try:
-        rows = []
-        for j in range(m):
-            model = KMeans(
-                k=ksub, seed=seed + j, featuresCol=f"__sub{j}", maxIter=max_iter
-            ).fit(featurized)
-            rows += [
-                (j, c, [float(x) for x in cent])
-                for c, cent in enumerate(model.clusterCenters())
-            ]
-        return corpus.sparkSession.createDataFrame(
-            rows, "subspace int, code int, centroid array<double>"
-        )
-    finally:
-        featurized.unpersist()
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-) -> DataFrame:
-    """Encode vectors to PQ codes: (id, codes array<tinyint>), codes[j] =
-    argmin_c ||subvec_j - centroid_{j,c}||.
-
-    Shape for scale: posexplode to (row, subspace) pairs, broadcast-join
-    the m*ksub codebook, min_by per (row, subspace), re-assemble with
-    array_agg ordered by subspace. Two hash shuffles keyed by (id,
-    subspace) — an offline encode job; queries touch only the m-byte
-    codes. argmin ties break toward the LOWER code id (deterministic at
-    any parallelism).
-    """
-    first = corpus.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError("PQ: cannot encode an empty corpus / NULL embedding")
-    dim = len(first[0])
-    if dim % m:
-        # same guard build_pq_codebooks enforces — without it a
-        # mismatched m silently drops the tail dims from every subvector
-        raise ValueError(f"PQ: dim {dim} not divisible by m {m}")
-    # codebooks are m*ksub rows (dimension-sized, often driver-local), so
-    # this bound check is a trivial job; codes wrap negative past 127 in
-    # the non-ANSI tinyint cast below, corrupting the encoded index
-    max_code = codebooks.agg(F.max("code")).first()[0]
-    if max_code is not None and max_code > 127:
-        raise ValueError(
-            f"PQ: codebook code {max_code} exceeds tinyint range (127)"
-        )
-    dsub = dim // m
-
-    if normalize:
-        norm = l2_norm(F.col(vec_col))
-        vec = F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)
-    else:
-        vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    subvecs = ensure_parallelism(corpus).select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[F.slice(vec, j * dsub + 1, dsub) for j in range(m)]
-            )
-        ).alias("subspace", "__sub"),
-    )
-    # squared euclidean to each centroid of the matching subspace
-    d2 = F.aggregate(
-        F.zip_with(F.col("__sub"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    assigned = (
-        subvecs.join(F.broadcast(codebooks), "subspace")
-        .select(
-            F.col(id_col),
-            "subspace",
-            # round to kill float noise in the argmin comparison, then
-            # tiebreak on code id via the struct ordering of min()
-            F.struct(F.round(d2, 12).alias("d2"), F.col("code")).alias("__sc"),
-        )
-        .groupBy(id_col, "subspace")
-        .agg(F.min("__sc").getField("code").cast("tinyint").alias("code"))
-    )
-    return assigned.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("subspace"), F.col("code")))
-            ),
-            lambda s: s.getField("code"),
-        ).alias("codes")
-    )
-
-
 def _det_pq_fit(
     corpus: DataFrame,
     m: int,
@@ -1248,31 +1055,24 @@ def build_pq_index(
     ksub: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    deterministic: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize a PQ index (codebooks + encoded corpus) as parquet —
-    the offline build job; queries read codes only. Same _BUILT-sentinel
-    contract as build_ivf_index (partitioned/overwrite writes leave no
-    trustworthy root _SUCCESS).
+    the offline build job; queries read codes only. Codebooks and codes
+    come from the exact-integer Lloyd (:func:`_det_pq_fit`), so the
+    probed top-k has a DuckDB value-hash twin (query key ann_cosine_pq).
+    Same _BUILT-marker contract as build_ivf_index (partitioned/overwrite
+    writes leave no trustworthy root _SUCCESS).
 
-    ``deterministic=True`` trains/encodes via the exact-integer Lloyd
-    (:func:`_det_pq_fit` — ``seed`` unused) so the probed top-k has a
-    DuckDB value-hash twin (query key ann_cosine_pq since r10)."""
-    if deterministic:
-        codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
-    else:
-        codebooks = build_pq_codebooks(corpus, m, ksub, vec_col, seed)
-        encoded = pq_encode(corpus, codebooks, m, id_col, vec_col)
+    Vectors are L2-normalized and split into ``m`` contiguous subvectors
+    of dim/m dims, each with its own ``ksub``-centroid codebook (Jégou et
+    al., "Product Quantization for Nearest Neighbor Search", TPAMI'11). A
+    PQ code is m bytes per vector vs 4*dim for float32: at dim=64/m=8 a
+    32x smaller index, the memory lever that keeps billion-scale ANN in
+    RAM."""
+    codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
     codebooks.write.mode("overwrite").parquet(f"{index_dir}/codebooks")
     encoded.write.mode("overwrite").parquet(f"{index_dir}/encoded")
-    _write_built(
-        index_dir,
-        kind="pq-det" if deterministic else "pq",
-        m=m,
-        ksub=ksub,
-        seed=seed,
-    )
+    _write_built(index_dir, kind="pq-det", m=m, ksub=ksub)
     return read_pq_index(corpus.sparkSession, index_dir)
 
 
@@ -1284,66 +1084,17 @@ def read_pq_index(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def cosine_topk_pq(
-    corpus: DataFrame,
+def _pq_lut(
     queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-    codebooks: DataFrame | None = None,
-    encoded: DataFrame | None = None,
-    rerank: int = 0,
-    index_dir: str | None = None,
-    deterministic: bool = False,
+    codebooks: DataFrame,
+    m: int,
+    vec_col: str,
+    query_id_col: str,
 ) -> DataFrame:
-    """PQ approximate cosine top-k via asymmetric distance computation:
-    the query stays exact, the corpus is m-byte codes, and each pair
-    scores as sum_j LUT[j][codes[j]] where LUT holds the query-subvector
-    x centroid partial dot products.
-
-    The per-query LUT (m*ksub doubles) is built as a DataFrame aggregate
-    and broadcast into the encoded corpus — the corpus never shuffles
-    and each pair costs m array lookups + adds instead of dim multiplies.
-    Both sides are L2-normalized up front, so the summed partial dots
-    approximate cosine directly; ranking quality is pinned by the
-    ``ann_pq_recall`` recall gate (same invariant form as LSH/IVF/int8).
-
-    ``rerank=R`` enables the standard two-stage shape: PQ scores prune
-    the corpus to a per-query shortlist of R candidates, then EXACT
-    cosine re-ranks only those R rows (a semi-join of the corpus against
-    the shortlist — |queries|*R rows of float math instead of
-    |queries|*|corpus|). This is how PQ indexes are actually operated:
-    the compressed scan bounds memory/compute, the re-rank restores
-    ranking quality lost to quantization distortion.
-
-    Pass ``codebooks``/``encoded`` (from :func:`build_pq_codebooks` /
-    :func:`pq_encode`, possibly parquet-materialized) to skip the build —
-    the at-scale shape, mirroring cosine_topk_ivf's index_dir contract.
-    """
-    if codebooks is None or encoded is None:
-        if index_dir is not None and os.path.isfile(f"{index_dir}/_BUILT"):
-            _check_built(
-                index_dir,
-                kind="pq-det" if deterministic else "pq",
-                m=m,
-                ksub=ksub,
-            )
-            codebooks, encoded = read_pq_index(corpus.sparkSession, index_dir)
-        elif index_dir is not None:
-            codebooks, encoded = build_pq_index(
-                corpus, index_dir, m, ksub, id_col, vec_col, seed,
-                deterministic,
-            )
-        elif deterministic:
-            codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
-        else:
-            codebooks = build_pq_codebooks(corpus, m, ksub, vec_col, seed)
-            encoded = pq_encode(corpus, codebooks, m, id_col, vec_col)
-
+    """Per-query PQ lookup table: (query_id, __lut) where the flat
+    ``__lut[j*ksub + code]`` is the partial dot of the normalized query's
+    subvector j with centroid (j, code) — m*ksub doubles per query,
+    assembled by ordered struct sort (subspace major, code minor)."""
     qnorm = l2_norm(F.col(vec_col))
     qnormalized = F.transform(F.col(vec_col), lambda x: x.cast("double") / qnorm)
     dim_row = queries.select(F.size(vec_col).alias("d")).first()
@@ -1364,9 +1115,7 @@ def cosine_topk_pq(
         "code",
         dot_product(F.col("__qsub"), F.col("centroid")).alias("__pd"),
     )
-    # flat LUT: index j*ksub + code -> partial dot, assembled by ordered
-    # struct sort (subspace major, code minor)
-    lut = partial.groupBy(query_id_col).agg(
+    return partial.groupBy(query_id_col).agg(
         F.transform(
             F.array_sort(
                 F.collect_list(
@@ -1376,7 +1125,13 @@ def cosine_topk_pq(
             lambda s: s.getField("__pd"),
         ).alias("__lut")
     )
-    score = F.aggregate(
+
+
+def _pq_score(m: int, ksub: int):
+    """Asymmetric-distance score of a (codes, __lut) row: sum_j
+    LUT[j][codes[j]] — m array lookups + adds instead of dim multiplies.
+    Both sides are L2-normalized, so the sum approximates cosine."""
+    return F.aggregate(
         F.zip_with(
             F.col("codes"),
             F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1387,13 +1142,23 @@ def cosine_topk_pq(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = ensure_parallelism(encoded).join(
-        F.broadcast(lut), on=F.col(id_col) != F.col(query_id_col)
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(score, 6).alias("cosine_sim"),
-    )
+
+
+def _pq_topk(
+    scored: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Rank PQ-scored (query, neighbor_id, cosine_sim) pairs. With
+    ``rerank > k`` the top-``rerank`` shortlist is re-scored with EXACT
+    cosine — per (query, candidate) pair one exact cosine, |queries| x
+    rerank rows, the corpus touched via a broadcast semi-join — and the
+    top k of that is returned."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -1404,8 +1169,6 @@ def cosine_topk_pq(
     )
     if rerank <= k:
         return topk
-    # exact re-rank of the PQ shortlist: per (query, candidate) pair one
-    # exact cosine — |queries|*rerank rows, corpus touched via semi-join
     shortlist = topk.select(query_id_col, "neighbor_id")
     cand = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1435,6 +1198,65 @@ def cosine_topk_pq(
     )
 
 
+def cosine_topk_pq(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    m: int = 8,
+    ksub: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    rerank: int = 0,
+    index_dir: str | None = None,
+) -> DataFrame:
+    """PQ approximate cosine top-k via asymmetric distance computation:
+    the query stays exact, the corpus is m-byte codes, and each pair
+    scores as sum_j LUT[j][codes[j]] where LUT holds the query-subvector
+    x centroid partial dot products.
+
+    The per-query LUT (m*ksub doubles) is built as a DataFrame aggregate
+    and broadcast into the encoded corpus — the corpus never shuffles
+    and each pair costs m array lookups + adds instead of dim multiplies.
+    Ranking quality is pinned by the ``ann_pq_recall`` recall gate (same
+    invariant form as LSH/IVF/int8).
+
+    ``rerank=R`` enables the standard two-stage shape: PQ scores prune
+    the corpus to a per-query shortlist of R candidates, then EXACT
+    cosine re-ranks only those R rows (a semi-join of the corpus against
+    the shortlist — |queries|*R rows of float math instead of
+    |queries|*|corpus|). This is how PQ indexes are actually operated:
+    the compressed scan bounds memory/compute, the re-rank restores
+    ranking quality lost to quantization distortion.
+
+    With ``index_dir`` a materialized index is probed (built there first
+    when absent) — the at-scale shape, mirroring cosine_topk_ivf;
+    without it the index is fitted in memory.
+    """
+    if index_dir is not None and _check_built(
+        index_dir, kind="pq-det", m=m, ksub=ksub
+    ):
+        codebooks, encoded = read_pq_index(corpus.sparkSession, index_dir)
+    elif index_dir is not None:
+        codebooks, encoded = build_pq_index(
+            corpus, index_dir, m, ksub, id_col, vec_col
+        )
+    else:
+        codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
+
+    lut = _pq_lut(queries, codebooks, m, vec_col, query_id_col)
+    scored = ensure_parallelism(encoded).join(
+        F.broadcast(lut), on=F.col(id_col) != F.col(query_id_col)
+    ).select(
+        F.col(query_id_col),
+        F.col(id_col).alias("neighbor_id"),
+        F.round(_pq_score(m, ksub), 6).alias("cosine_sim"),
+    )
+    return _pq_topk(
+        scored, corpus, queries, k, rerank, id_col, vec_col, query_id_col
+    )
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     index_dir: str,
@@ -1443,11 +1265,8 @@ def build_ivfpq_index(
     ksub: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     max_iter: int = 4,
     codebooks: DataFrame | None = None,
-    residual: bool = False,
-    deterministic: bool = False,
     encoded: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Composed IVF×PQ index — the production billion-scale ANN layout
@@ -1457,91 +1276,27 @@ def build_ivfpq_index(
     nprobe/nlist of the index AND each candidate is m bytes, composing
     the two pruning levers (which cells, how many bytes per vector).
 
-    ``residual=True`` is the FAISS-faithful form: codebooks train on and
-    codes encode (normalized_vector - cell_centroid) residuals, which are
-    smaller and better-centered than raw vectors, so the same m×ksub
-    budget quantizes finer. The probe then scores
-    dot(q, centroid_cell) + Σ_j LUT[j][code_j] — identical probe cost,
-    one extra broadcast column. Default False preserves the established
-    plain-PQ layout (and lets prebuilt plain codebooks be shared).
+    Cells come from the exact-integer IVF quantizer and codes/codebooks
+    from :func:`_det_pq_fit`, so the probed top-k has a DuckDB value-hash
+    twin (query key ann_cosine_ivfpq). Pass ``codebooks`` AND ``encoded``
+    from a same-m/ksub PQ index to skip the PQ fit (identical training by
+    construction).
 
     Returns (coded, centroids, codebooks) read back from ``index_dir``;
-    _BUILT-sentinel contract as the other index builders.
-
-    ``deterministic=True`` (plain layout only — the residual form would
-    need residuals re-fix-pointed and is not oracled): cells from the
-    exact-integer IVF quantizer and codes/codebooks from
-    :func:`_det_pq_fit` (``seed`` unused), so the probed top-k has a
-    DuckDB value-hash twin (query key ann_cosine_ivfpq since r10).
-    Pass ``codebooks`` AND ``encoded`` from a same-parameter
-    deterministic PQ index to skip the m refits (identical training by
-    construction).
+    _BUILT-marker contract as the other index builders.
     """
-    if deterministic and residual:
-        raise ValueError(
-            "build_ivfpq_index: deterministic currently covers the plain "
-            "layout only"
-        )
     inverted, centroid_df = build_ivf_index(
-        corpus, nlist, id_col, vec_col, seed, max_iter, index_dir=None,
-        deterministic=deterministic,
+        corpus, nlist, id_col, vec_col, max_iter
     )
-    if residual:
-        norm = l2_norm(F.col(vec_col))
-        res = F.zip_with(
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / norm),
-            F.col("centroid"),
-            lambda a, b: a - b,
-        )
-        residuals = (
-            inverted.select(id_col, "cell", vec_col)
-            .join(F.broadcast(centroid_df), "cell")
-            .select(id_col, "cell", res.alias("__res"))
-        )
-        # residual frames feed BOTH the m training fits and the encode —
-        # persist so the IVF assignment join runs once, not m+1 times
-        residuals.persist()
-        try:
-            if codebooks is None:
-                codebooks = build_pq_codebooks(
-                    residuals, m, ksub, "__res", seed, max_iter,
-                    normalize=False,
-                )
-            encoded = pq_encode(
-                residuals, codebooks, m, id_col, "__res", normalize=False
-            )
-            coded = residuals.select(id_col, "cell").join(encoded, id_col)
-            coded.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{index_dir}/coded"
-            )
-        finally:
-            residuals.unpersist()
-        centroid_df.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-        codebooks.write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-        _write_built(
-            index_dir, kind="ivfpq", nlist=nlist, m=m, ksub=ksub,
-            seed=seed, residual=True,
-        )
-        return read_ivfpq_index(corpus.sparkSession, index_dir)
-    if deterministic:
-        if codebooks is None or encoded is None:
-            codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
-    elif codebooks is None:
-        # pass precomputed codebooks (e.g. the flat-PQ index's, same
-        # m/ksub/seed => identical training) to skip the m KMeans fits
-        codebooks = build_pq_codebooks(corpus, m, ksub, vec_col, seed)
-    if encoded is None:
-        encoded = pq_encode(corpus, codebooks, m, id_col, vec_col)
+    if codebooks is None or encoded is None:
+        codebooks, encoded = _det_pq_fit(corpus, m, ksub, id_col, vec_col)
     coded = inverted.select(id_col, "cell").join(encoded, id_col)
     coded.write.mode("overwrite").partitionBy("cell").parquet(
         f"{index_dir}/coded"
     )
     centroid_df.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     codebooks.write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-    _write_built(
-        index_dir, kind="ivfpq-det" if deterministic else "ivfpq",
-        nlist=nlist, m=m, ksub=ksub, seed=seed, residual=False,
-    )
+    _write_built(index_dir, kind="ivfpq-det", nlist=nlist, m=m, ksub=ksub)
     return read_ivfpq_index(corpus.sparkSession, index_dir)
 
 
@@ -1565,11 +1320,8 @@ def cosine_topk_ivfpq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    seed: int = 42,
     rerank: int = 0,
     index_dir: str | None = None,
-    residual: bool = False,
-    deterministic: bool = False,
 ) -> DataFrame:
     """IVF×PQ approximate cosine top-k: rank cell centroids per query,
     statically partition-prune the coded index to the nprobe probed
@@ -1578,35 +1330,26 @@ def cosine_topk_ivfpq(
     partition pruning rather than hoping for DPP), LUT-score the m-byte
     codes of candidates only, then exact-re-rank the top-``rerank``
     shortlist against the raw vectors. Quality pinned by the
-    ``ann_ivfpq_recall`` gate. ``residual=True`` probes a
-    residual-trained index (build_ivfpq_index(residual=True)): scoring
-    adds the per-(query, cell) centroid dot to the LUT sum — pass the
-    SAME flag used at build time."""
-    if index_dir is not None and os.path.isfile(f"{index_dir}/_BUILT"):
-        # m/ksub index the LUT scoring and residual flips the
-        # centroid-dot term — mismatches mis-score silently, so they
-        # must match the build. nlist deliberately unchecked: cells come
-        # from disk, a different probe-side default is harmless.
-        _check_built(
-            index_dir,
-            kind="ivfpq-det" if deterministic else "ivfpq",
-            m=m, ksub=ksub, residual=residual,
-        )
+    ``ann_ivfpq_recall`` gate."""
+    # m/ksub index the LUT scoring — mismatches mis-score silently, so
+    # they must match the build. nlist deliberately unchecked: cells come
+    # from disk, a different probe-side default is harmless.
+    if index_dir is not None and _check_built(
+        index_dir, kind="ivfpq-det", m=m, ksub=ksub
+    ):
         coded, centroid_df, codebooks = read_ivfpq_index(
             corpus.sparkSession, index_dir
         )
     elif index_dir is not None:
         coded, centroid_df, codebooks = build_ivfpq_index(
-            corpus, index_dir, nlist, m, ksub, id_col, vec_col, seed,
-            residual=residual, deterministic=deterministic,
+            corpus, index_dir, nlist, m, ksub, id_col, vec_col
         )
     else:
         import tempfile
 
         with tempfile.TemporaryDirectory() as tmp:
             coded, centroid_df, codebooks = build_ivfpq_index(
-                corpus, tmp, nlist, m, ksub, id_col, vec_col, seed,
-                residual=residual, deterministic=deterministic,
+                corpus, tmp, nlist, m, ksub, id_col, vec_col
             )
             # materialize out of the temp dir before it vanishes
             coded = _ckpt(coded)
@@ -1630,7 +1373,7 @@ def cosine_topk_ivfpq(
         )
         .withColumn("__pr", F.row_number().over(probe_w))
         .filter(F.col("__pr") <= nprobe)
-        .select(query_id_col, "cell", F.col("__cdist").alias("__cell_dot"))
+        .select(query_id_col, "cell")
     )
     probe_rows = probes.collect()  # queries x nprobe rows — dimension-sized
     probed_cells = sorted({r["cell"] for r in probe_rows})
@@ -1639,89 +1382,15 @@ def cosine_topk_ivfpq(
         F.broadcast(probes), "cell"
     ).filter(F.col(id_col) != F.col(query_id_col))
 
-    # PQ LUT scoring restricted to candidates (same form as cosine_topk_pq)
-    qnorm = l2_norm(F.col(vec_col))
-    qnormalized = F.transform(F.col(vec_col), lambda x: x.cast("double") / qnorm)
-    dim_row = queries.select(F.size(vec_col).alias("d")).first()
-    if dim_row is None or dim_row["d"] is None or dim_row["d"] < 0:
-        raise ValueError("IVFPQ probe: empty query set / NULL query embedding")
-    dsub = dim_row["d"] // m
-    qsub = queries.select(
-        F.col(query_id_col),
-        F.posexplode(
-            F.array(*[F.slice(qnormalized, j * dsub + 1, dsub) for j in range(m)])
-        ).alias("subspace", "__qsub"),
-    )
-    lut = (
-        qsub.join(F.broadcast(codebooks), "subspace")
-        .select(
-            F.col(query_id_col),
-            "subspace",
-            "code",
-            dot_product(F.col("__qsub"), F.col("centroid")).alias("__pd"),
-        )
-        .groupBy(query_id_col)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("subspace"), F.col("code"), F.col("__pd"))
-                    )
-                ),
-                lambda s: s.getField("__pd"),
-            ).alias("__lut")
-        )
-    )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda code, j: F.element_at(
-                F.col("__lut"), (j * ksub + code.cast("int") + 1).cast("int")
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # residual index: approx dot(q, v) = dot(q, cell centroid) + the LUT
-    # sum over residual codes; plain index: the LUT sum alone
-    total_score = (score + F.col("__cell_dot")) if residual else score
+    # PQ LUT scoring restricted to candidates
+    lut = _pq_lut(queries, codebooks, m, vec_col, query_id_col)
     scored = ensure_parallelism(cand).join(F.broadcast(lut), query_id_col).select(
         F.col(query_id_col),
         F.col(id_col).alias("neighbor_id"),
-        F.round(total_score, 6).alias("cosine_sim"),
+        F.round(_pq_score(m, ksub), 6).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= max(k, rerank))
-        .orderBy(query_id_col, "sim_rank")
-    )
-    if rerank <= k:
-        return topk
-    shortlist = topk.select(query_id_col, "neighbor_id")
-    cand_vec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__c_vec"),
-        l2_norm(F.col(vec_col)).alias("__c_norm"),
-    ).join(F.broadcast(shortlist), "neighbor_id")
-    denom = F.col("__q_norm") * F.col("__c_norm")
-    rescored = cand_vec.join(F.broadcast(q), query_id_col).select(
-        F.col(query_id_col),
-        "neighbor_id",
-        F.round(
-            F.when(
-                denom != 0.0, dot_product(F.col("__q_vec"), F.col("__c_vec")) / denom
-            ),
-            6,
-        ).alias("cosine_sim"),
-    )
-    return (
-        rescored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= k)
-        .orderBy(query_id_col, "sim_rank")
+    return _pq_topk(
+        scored, corpus, queries, k, rerank, id_col, vec_col, query_id_col
     )
 
 

@@ -949,7 +949,7 @@ def _ivf_sql(
     k: int = 5,
 ) -> str:
     """Unrolled-CTE twin of the DETERMINISTIC IVF probe (query key
-    ann_cosine_ivf: similarity.build_ivf_index deterministic=True +
+    ann_cosine_ivf: similarity.build_ivf_index +
     cosine_topk_ivf_probe). Replicates the whole path: L2-normalize,
     fix-point to BIGINTs (round((x/|x| + 1) * scale) — the
     clustering.kmeans_fit recipe), ``iters`` unrolled exact-integer
@@ -1107,7 +1107,7 @@ def _pq_sql(
     rerank: int = 100,
 ) -> str:
     """Twin of the deterministic PQ probe (query key ann_cosine_pq:
-    build_pq_index deterministic=True + cosine_topk_pq): per-subspace
+    build_pq_index + cosine_topk_pq): per-subspace
     exact-integer Lloyd codebooks AND codes (the fit's own assignment —
     no float re-encode), per-query LUT of subvector x centroid partial
     dots, j-ordered LUT-sum scoring rounded to 6dp, top-``rerank``

@@ -445,7 +445,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = _ground_truth_topk(spark, sf_dir, k=5)
     approx = similarity.cosine_topk_ivf(
         emb, _query_vectors(emb), k=5, nlist=8, nprobe=3,
-        index_dir=_ivf_index_dir(sf_dir), deterministic=True,
+        index_dir=_ivf_index_dir(sf_dir),
     ).select("query_id", "neighbor_id")
     return _ann_recall(exact, approx, floor=0.2)
 
@@ -481,8 +481,8 @@ def q_ann_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _IVFPQ_PARAMS
     return similarity.cosine_topk_ivfpq(
         emb, _query_vectors(emb), k=5, nlist=p["nlist"], nprobe=p["nprobe"],
-        m=p["m"], ksub=p["ksub"], seed=p["seed"], rerank=p["rerank"],
-        index_dir=_ivfpq_index_dir(sf_dir), deterministic=p["deterministic"],
+        m=p["m"], ksub=p["ksub"], rerank=p["rerank"],
+        index_dir=_ivfpq_index_dir(sf_dir),
     )
 
 
@@ -497,8 +497,8 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _IVFPQ_PARAMS
     approx = similarity.cosine_topk_ivfpq(
         emb, _query_vectors(emb), k=5, nlist=p["nlist"], nprobe=p["nprobe"],
-        m=p["m"], ksub=p["ksub"], seed=p["seed"], rerank=p["rerank"],
-        index_dir=_ivfpq_index_dir(sf_dir), deterministic=p["deterministic"],
+        m=p["m"], ksub=p["ksub"], rerank=p["rerank"],
+        index_dir=_ivfpq_index_dir(sf_dir),
     ).select("query_id", "neighbor_id")
     return _ann_recall(exact, approx, floor=0.2)
 
@@ -518,8 +518,7 @@ def q_ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _PQ_PARAMS
     return similarity.cosine_topk_pq(
         emb, _query_vectors(emb), k=5, m=p["m"], ksub=p["ksub"],
-        seed=p["seed"], rerank=p["rerank"], index_dir=_pq_index_dir(sf_dir),
-        deterministic=p["deterministic"],
+        rerank=p["rerank"], index_dir=_pq_index_dir(sf_dir),
     )
 
 
@@ -535,8 +534,7 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _PQ_PARAMS
     approx = similarity.cosine_topk_pq(
         emb, _query_vectors(emb), k=5, m=p["m"], ksub=p["ksub"],
-        seed=p["seed"], rerank=p["rerank"], index_dir=_pq_index_dir(sf_dir),
-        deterministic=p["deterministic"],
+        rerank=p["rerank"], index_dir=_pq_index_dir(sf_dir),
     ).select("query_id", "neighbor_id")
     return _ann_recall(exact, approx, floor=0.6)
 
@@ -699,7 +697,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     p = _IVF_PARAMS
     rep = similarity.semantic_dedup(
-        emb, threshold=_SEMANTIC_DEDUP_T, nlist=p["nlist"], seed=p["seed"],
+        emb, threshold=_SEMANTIC_DEDUP_T, nlist=p["nlist"],
         max_iter=p["max_iter"], index_dir=_ivf_index_dir(sf_dir),
     )
     return similarity.semantic_dedup_gate(emb, rep, _SEMANTIC_DEDUP_T)
@@ -1695,7 +1693,7 @@ def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k against a materialized inverted file
     (built on first call, probe-only afterwards). The coarse quantizer
     is the deterministic exact-integer Lloyd since r10
-    (build_ivf_index deterministic=True), so the DuckDB twin replicates
+    (similarity.build_ivf_index), so the DuckDB twin replicates
     the WHOLE path — normalization fix-point, 4 unrolled Lloyd rounds,
     cell assignment, centroid ranking, in-cell exact cosine — and the
     probe output is value-hash checked (r9 verdict task 4); recall
@@ -1703,7 +1701,7 @@ def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_topk_ivf(
         emb, _query_vectors(emb), k=5, nlist=8, nprobe=3,
-        index_dir=_ivf_index_dir(sf_dir), deterministic=True,
+        index_dir=_ivf_index_dir(sf_dir),
     )
 
 

@@ -57,7 +57,7 @@ def test_dedup_and_funnel_return_empty(spark, empty):
     assert scd.scd2_history(empty["events"], "user_id", "state", "ts").count() == 0
 
 
-def test_similarity_empty_behavior(spark, empty):
+def test_similarity_empty_behavior(spark, empty, tmp_path):
     emb = empty["emb"]
     queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
     assert similarity.cosine_topk_bruteforce(emb, queries).count() == 0
@@ -65,9 +65,7 @@ def test_similarity_empty_behavior(spark, empty):
     # codebook training over nothing is meaningless -> loud refusal,
     # never a NoneType crash
     with pytest.raises(ValueError, match="empty corpus"):
-        similarity.build_pq_codebooks(emb, m=4, ksub=2)
-    with pytest.raises(ValueError, match="empty corpus"):
-        similarity.pq_encode(emb, emb, m=4)
+        similarity.build_pq_index(emb, str(tmp_path / "pq"), m=4, ksub=2)
 
 
 def test_audit_operators_degenerate_but_valid(spark, empty):

@@ -183,18 +183,20 @@ def test_pandas_matmul_matches_bruteforce(vectors):
         assert a.cosine_sim == pytest.approx(b.cosine_sim, abs=1e-6)
 
 
-def test_pq_encode_shapes_and_determinism(clustered_vectors):
-    cb = similarity.build_pq_codebooks(clustered_vectors, m=3, ksub=4, max_iter=2)
+def test_pq_encode_shapes_and_determinism(clustered_vectors, tmp_path):
+    cb, enc = similarity.build_pq_index(
+        clustered_vectors, str(tmp_path / "a"), m=3, ksub=4
+    )
     assert cb.count() == 3 * 4
     assert cb.columns == ["subspace", "code", "centroid"]
-    enc = similarity.pq_encode(clustered_vectors, cb, m=3)
     rows = {r.vec_id: list(r.codes) for r in enc.collect()}
     assert len(rows) == 60 and all(len(c) == 3 for c in rows.values())
     assert all(0 <= x < 4 for c in rows.values() for x in c)
-    # deterministic re-encode
-    again = {r.vec_id: list(r.codes) for r in similarity.pq_encode(
-        clustered_vectors, cb, m=3).collect()}
-    assert again == rows
+    # deterministic re-fit into a fresh dir
+    _, enc2 = similarity.build_pq_index(
+        clustered_vectors, str(tmp_path / "b"), m=3, ksub=4
+    )
+    assert {r.vec_id: list(r.codes) for r in enc2.collect()} == rows
     # sanity that encoding reflects geometry: the three clusters live on
     # different axes after normalization, so their code vectors must
     # differ pairwise (within-cluster codes may still differ in fine
@@ -239,9 +241,11 @@ def test_pq_index_materialize_roundtrip(clustered_vectors, tmp_path):
     assert e1 == e2
 
 
-def test_pq_rejects_indivisible_dim(clustered_vectors):
+def test_pq_rejects_indivisible_dim(clustered_vectors, tmp_path):
     with pytest.raises(ValueError, match="not divisible"):
-        similarity.build_pq_codebooks(clustered_vectors, m=2, ksub=4)
+        similarity.build_pq_index(
+            clustered_vectors, str(tmp_path / "pq"), m=2, ksub=4
+        )
 
 
 def test_ivfpq_matches_bruteforce_on_clustered_data(clustered_vectors, tmp_path):
@@ -270,32 +274,6 @@ def test_ivfpq_matches_bruteforce_on_clustered_data(clustered_vectors, tmp_path)
     for r in again.collect():
         ps2.setdefault(r.query_id, set()).add(r.neighbor_id)
     assert ps2 == ps
-
-
-def test_ivfpq_residual_mode_matches_bruteforce(clustered_vectors, tmp_path):
-    """FAISS-faithful residual training: codebooks on (vector - cell
-    centroid); the probe's dot(q, centroid) + LUT-sum scoring plus exact
-    re-rank must recover the true top-5 — pins the composed residual
-    arithmetic, the part that silently breaks if either term drops."""
-    queries = clustered_vectors.filter(F.col("vec_id").isin([0, 20, 40])).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = similarity.cosine_topk_bruteforce(clustered_vectors, queries, k=5)
-    res = similarity.cosine_topk_ivfpq(
-        clustered_vectors, queries, k=5, nlist=3, nprobe=1, m=3, ksub=8,
-        rerank=20, index_dir=str(tmp_path / "res"), residual=True,
-    )
-    es, ps = {}, {}
-    for r in exact.collect():
-        es.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in res.collect():
-        ps.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert ps == es
-    # residual codes genuinely differ from plain codes (different space)
-    plain_coded, _, _ = similarity.read_ivfpq_index(
-        clustered_vectors.sparkSession, str(tmp_path / "res")
-    )
-    assert plain_coded.count() == 60
 
 
 def test_semantic_dedup_greedy_semantics(spark):
@@ -389,75 +367,170 @@ def test_det_pq_grouped_matches(spark):
     assert got_codes == {i: tuple(cs) for i, cs in exp_codes.items()}
 
 
-def test_validated_index_dir_heals_stale_marker(tmp_path):
-    """Managed-cache self-heal (the r10->r12 sf0.01 incident): a _BUILT
-    marker contradicting the expected build params means a stale
-    artifact from an older recipe — the helper must delete the dir so
-    consumers rebuild, instead of every probe raising in a session that
-    never runs prebuild_indexes (the driver's)."""
-    import json
+def _record_builds(monkeypatch):
+    """Record the index dir of every _BUILT marker an index builder writes."""
+    builds = []
+    write = similarity._write_built
+
+    def recording(index_dir, **params):
+        builds.append(index_dir)
+        write(index_dir, **params)
+
+    monkeypatch.setattr(similarity, "_write_built", recording)
+    return builds
+
+
+def test_semantic_dedup_and_ivf_probe_build_one_index(
+    spark, clustered_vectors, tmp_path, monkeypatch
+):
+    """semantic_dedup and the IVF probe share the managed IVF cache dir
+    and read the same cells. On a fresh cache, q_semantic_dedup builds
+    the index once and q_ann_cosine_ivf probes it — a second quantizer
+    writing a different kind of index into the dir would make the probe
+    discard it and build again. semantic_dedup's report is the same with
+    and without the materialized index."""
     import os
 
-    from lab_etl_batch_data_processing_pipeline__spark.artifacts import (
-        _validated_index_dir,
+    from lab_etl_batch_data_processing_pipeline__spark import artifacts, registry
+
+    sf = str(tmp_path / "sf")
+    clustered_vectors.write.parquet(os.path.join(sf, "embeddings.parquet"))
+    monkeypatch.setattr(artifacts, "_REPO_ROOT", str(tmp_path))
+    builds = _record_builds(monkeypatch)
+
+    gate = registry.q_semantic_dedup(spark, sf).first()
+    assert gate.ids_valid and gate.no_kept_near_pair and gate.dropped_have_culprit
+    registry.q_ann_cosine_ivf(spark, sf).collect()
+    index_dir = artifacts._ivf_index_dir(sf)
+    assert builds == [index_dir]
+
+    p = artifacts._IVF_PARAMS
+
+    def report(**kw):
+        return sorted(
+            tuple(r)
+            for r in similarity.semantic_dedup(
+                clustered_vectors, threshold=registry._SEMANTIC_DEDUP_T,
+                nlist=p["nlist"], max_iter=p["max_iter"], **kw,
+            ).collect()
+        )
+
+    assert report(index_dir=index_dir) == report()
+    assert builds == [index_dir]
+
+
+def _cluster_queries(clustered_vectors):
+    return clustered_vectors.filter(F.col("vec_id").isin([0, 20, 40])).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
 
-    expected = {"kind": "ivf-det"}
 
-    def make(marker_content):
-        d = tmp_path / "idx"
-        d.mkdir(exist_ok=True)
-        (d / "_BUILT").write_text(marker_content)
-        (d / "payload").write_text("x")
-        return str(d)
+#: one probe per index family, as (probe(corpus, queries, index_dir),
+#: kind its builder records); PQ scores are compared without re-rank so
+#: they come from the index's codes
+_FAMILY_PROBES = {
+    "ivf": (
+        lambda cv, q, d: similarity.cosine_topk_ivf(
+            cv, q, k=5, nlist=3, nprobe=1, index_dir=d
+        ),
+        "ivf-det",
+    ),
+    "pq": (
+        lambda cv, q, d: similarity.cosine_topk_pq(
+            cv, q, k=5, m=3, ksub=8, index_dir=d
+        ),
+        "pq-det",
+    ),
+    "ivfpq": (
+        lambda cv, q, d: similarity.cosine_topk_ivfpq(
+            cv, q, k=5, nlist=3, nprobe=1, m=3, ksub=8, index_dir=d
+        ),
+        "ivfpq-det",
+    ),
+}
 
-    # contradicting marker -> dir removed
-    d = make(json.dumps({"kind": "ivf", "nlist": 8}))
-    assert _validated_index_dir(d, expected) == d
-    assert not os.path.exists(d)
 
-    # matching marker -> kept
-    d = make(json.dumps({"kind": "ivf-det", "nlist": 8}))
-    _validated_index_dir(d, expected)
-    assert os.path.isfile(os.path.join(d, "_BUILT"))
+@pytest.mark.parametrize("family", sorted(_FAMILY_PROBES))
+def test_unparseable_index_marker_means_not_built(
+    clustered_vectors, tmp_path, monkeypatch, family
+):
+    """A _BUILT marker cut short (truncated JSON) is "not built": the
+    probe rebuilds the index over it and returns the clean build's top-k."""
+    import json
 
-    # marker missing a checked key -> trusted, kept
-    d = make(json.dumps({"nlist": 8}))
-    _validated_index_dir(d, expected)
-    assert os.path.isfile(os.path.join(d, "_BUILT"))
+    probe, kind = _FAMILY_PROBES[family]
+    queries = _cluster_queries(clustered_vectors)
+    d = tmp_path / family
+    clean = probe(clustered_vectors, queries, str(d)).collect()
+    marker = d / "_BUILT"
+    text = marker.read_text()
+    marker.write_text(text[: len(text) // 2])
 
-    # legacy plain-text sentinel recorded only the residual flag and
-    # _check_built explicitly trusts it (r12 ADVICE) — the helper must
-    # match: validate on the residual key alone, not treat it as stale
-    d = make("ok\n")
-    _validated_index_dir(d, expected)
-    assert os.path.isfile(os.path.join(d, "_BUILT"))
-    d = make("ok residual")
-    _validated_index_dir(d, {"kind": "ivfpq-det", "residual": False})
-    assert not os.path.exists(d)  # recorded flag contradicts the probe
-    d = make("ok")
-    _validated_index_dir(d, {"kind": "ivfpq-det", "residual": False})
-    assert os.path.isfile(os.path.join(d, "_BUILT"))  # flag agrees
+    builds = _record_builds(monkeypatch)
+    assert probe(clustered_vectors, queries, str(d)).collect() == clean
+    assert builds == [str(d)]
+    assert json.loads(marker.read_text())["kind"] == kind
 
-    # unrecognized non-JSON garbage -> not a current-recipe build, removed
-    d = make("corrupted!!")
-    _validated_index_dir(d, expected)
-    assert not os.path.exists(d)
 
-    # transient read failure (OSError that is not FileNotFoundError:
-    # _BUILT is a directory here) -> leave the dir, the probe decides
-    d = str(tmp_path / "idx")
-    os.makedirs(os.path.join(d, "_BUILT"))
-    _validated_index_dir(d, expected)
-    assert os.path.isdir(d)
-    os.rmdir(os.path.join(d, "_BUILT"))
-    os.rmdir(d)
+#: probes that read each family's marker, with a marker each contradicts
+_CONTRADICTED = {
+    # a float-KMeans IVF index from before the exact-integer Lloyd
+    "ivf": (
+        lambda cv, q, d: similarity.cosine_topk_ivf(cv, q, nlist=3, index_dir=d),
+        {"kind": "ivf", "nlist": 3, "seed": 42},
+    ),
+    "semantic_dedup": (
+        lambda cv, q, d: similarity.semantic_dedup(cv, nlist=3, index_dir=d),
+        {"kind": "ivf", "nlist": 3, "seed": 42},
+    ),
+    "pq": (
+        lambda cv, q, d: similarity.cosine_topk_pq(cv, q, m=3, ksub=8, index_dir=d),
+        {"kind": "pq-det", "m": 4, "ksub": 8},
+    ),
+    "ivfpq": (
+        lambda cv, q, d: similarity.cosine_topk_ivfpq(
+            cv, q, m=3, ksub=8, index_dir=d
+        ),
+        {"kind": "ivfpq-det", "nlist": 3, "m": 3, "ksub": 16},
+    ),
+}
 
-    # no marker at all (mid-build dir) -> left alone
-    d = str(tmp_path / "fresh")
-    os.makedirs(d)
-    _validated_index_dir(d, expected)
-    assert os.path.isdir(d)
+
+def _index_dir_with(tmp_path, marker=None):
+    d = tmp_path / "idx"
+    d.mkdir()
+    (d / "payload").write_text("x")
+    if marker is None:
+        (d / "_BUILT").mkdir()  # reading the marker raises IsADirectoryError
+    else:
+        (d / "_BUILT").write_text(marker)
+    return d
+
+
+@pytest.mark.parametrize("consumer", sorted(_CONTRADICTED))
+def test_contradicting_index_marker_raises(clustered_vectors, tmp_path, consumer):
+    """A parseable marker whose kind/m/ksub contradict the probe raises
+    and leaves the dir as it was."""
+    import json
+
+    probe, marker = _CONTRADICTED[consumer]
+    d = _index_dir_with(tmp_path, json.dumps(marker))
+    with pytest.raises(ValueError, match="different parameters"):
+        probe(clustered_vectors, _cluster_queries(clustered_vectors), str(d))
+    assert json.loads((d / "_BUILT").read_text()) == marker
+    assert (d / "payload").read_text() == "x"
+
+
+@pytest.mark.parametrize("consumer", sorted(_CONTRADICTED))
+def test_index_marker_read_error_propagates(clustered_vectors, tmp_path, consumer):
+    """An OSError other than not-found while reading the marker
+    propagates; nothing is deleted and nothing is built."""
+    probe, _ = _CONTRADICTED[consumer]
+    d = _index_dir_with(tmp_path)
+    with pytest.raises(IsADirectoryError):
+        probe(clustered_vectors, _cluster_queries(clustered_vectors), str(d))
+    assert (d / "_BUILT").is_dir()
+    assert sorted(p.name for p in d.iterdir()) == ["_BUILT", "payload"]
 
 
 def test_sweep_orphan_siblings_removes_dead_pid_dirs_only(tmp_path):

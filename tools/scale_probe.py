@@ -101,8 +101,8 @@ def _recipe_valid(out: str, recipe: dict) -> bool:
     ID_STRIDE, or the slim column projection silently reused a stale
     corpus and produced wrong scale ratios (r13 ADVICE). A marker that
     is missing, unreadable, legacy-format, or records ANY differing
-    param invalidates the dir (mirrors artifacts._validated_index_dir,
-    except these dirs are cheap to rebuild so stale always rebuilds)."""
+    param invalidates the dir (these dirs are cheap to rebuild, so stale
+    always rebuilds)."""
     try:
         with open(os.path.join(out, "_BUILT")) as fh:
             return json.load(fh) == recipe
@@ -452,9 +452,7 @@ def main() -> None:
             t0 = time.time()
             inv, cent = (
                 f.localCheckpoint(eager=True)
-                for f in similarity.build_ivf_index(
-                    emb, nlist=nlist, deterministic=True
-                )
+                for f in similarity.build_ivf_index(emb, nlist=nlist)
             )
             record(
                 "ivf_index_build_det", scale, [round(time.time() - t0, 2)], nlist
