@@ -54,21 +54,15 @@ from lab_etl_batch_data_processing_pipeline__spark.operators import (
 from lab_etl_batch_data_processing_pipeline__spark.functions import json_funcs
 from lab_etl_batch_data_processing_pipeline__spark.operators.graph import _ckpt
 from lab_etl_batch_data_processing_pipeline__spark import artifacts as _art
+from lab_etl_batch_data_processing_pipeline__spark.artifacts import _t
 from lab_etl_batch_data_processing_pipeline__spark import oracles as _oracles
 from lab_etl_batch_data_processing_pipeline__spark.oracles import MIXTURE_WEIGHTS
 from lab_etl_batch_data_processing_pipeline__spark.sources import (
     ensure_timestamp,
     read_csv,
-    read_parquet,
 )
 
 SF0001 = "/root/testdata/sf0.001"
-
-# .cache stays anchored at the REPO ROOT (this module's parent dir),
-# exactly where it lived when this code was the entry file itself —
-# existing caches and the entrymod.__file__-derived test paths keep
-# working unchanged.
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 LINEITEM_KEYS = ["l_orderkey", "l_linenumber"]
 LINEITEM_NONKEYS = [
@@ -82,10 +76,6 @@ LINEITEM_NONKEYS = [
     "l_linestatus",
     "l_shipdate",
 ]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1043,12 +1033,14 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_sources_multimodal_streaming.py)."""
     from lab_etl_batch_data_processing_pipeline__spark.sources import media_synth
 
-    cache_dir = os.path.join(
-        _REPO_ROOT, ".cache", "media", "v1-n40"
+    # content is seed-deterministic, so the cache never goes stale
+    media_dir = _art.materialize(
+        _art.cache_dir("media", "v1-n40"),
+        lambda tmp: media_synth.synthetic_media(
+            spark, n_per_modality=40
+        ).write.parquet(tmp),
     )
-    media = media_synth.materialized_media(
-        spark, cache_dir, n_per_modality=40
-    ).repartition(4)
+    media = spark.read.parquet(media_dir).repartition(4)
     base = media.groupBy("modality").agg(
         F.count(F.lit(1)).alias("n_media"),
         F.sum(F.length("payload")).alias("payload_bytes"),
@@ -1086,27 +1078,14 @@ def q_parquet_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     up per month. The DuckDB oracle computes the post-upsert state
     straight from the base table, so a merge bug — lost update, replay
     duplication, wrong-partition rewrite — hash-mismatches. Cached per
-    testdata generation with a completion marker; the upsert itself is
+    testdata generation (artifacts.materialize); the upsert itself is
     replay-idempotent (pinned in tests)."""
     from lab_etl_batch_data_processing_pipeline__spark.sources.writers import (
         upsert_parquet,
     )
 
-    tag = _gen_tag(sf_dir)
-    ds_dir = os.path.join(
-        _REPO_ROOT, ".cache", "upsert", tag
-    )
-    marker = os.path.join(ds_dir, "_UPSERT_DONE")
-    if not os.path.isfile(marker):
-        # Build into a process-private sibling, then publish with ONE
-        # atomic rename: the two upsert passes are multi-step writes,
-        # so a second builder racing on ds_dir directly can interleave
-        # its dynamic-partition overwrite with ours and leave a
-        # marker-complete dataset holding only the updated partition
-        # (observed once under two concurrent local sessions).
-        tmp_dir = f"{ds_dir}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        _art.sweep_orphan_siblings(ds_dir)  # dead builders' tmp/stale dirs
+
+    def build(tmp: str) -> None:
         base = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
@@ -1114,7 +1093,7 @@ def q_parquet_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).alias("version"),
         )
         upsert_parquet(
-            spark, tmp_dir, base, ["o_orderkey"], "version",
+            spark, tmp, base, ["o_orderkey"], "version",
             partition_by=["order_month"],
         )
         updates = base.filter(F.col("order_month") == "1995-03").select(
@@ -1126,22 +1105,11 @@ def q_parquet_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("version"),
         )
         upsert_parquet(
-            spark, tmp_dir, updates, ["o_orderkey"], "version",
+            spark, tmp, updates, ["o_orderkey"], "version",
             partition_by=["order_month"],
         )
-        open(os.path.join(tmp_dir, "_UPSERT_DONE"), "w").close()
-        try:
-            os.rename(tmp_dir, ds_dir)
-        except OSError:
-            if os.path.isfile(marker):
-                # a concurrent builder published first — use its dataset
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-            else:
-                # ds_dir is a stale partial (a crashed pre-publish run):
-                # marker absent, so nothing can be reading it as
-                # complete — replace it with the fresh build
-                shutil.rmtree(ds_dir, ignore_errors=True)
-                os.rename(tmp_dir, ds_dir)
+
+    ds_dir = _art.materialize(_art.cache_dir("upsert", _gen_tag(sf_dir)), build)
     return (
         spark.read.parquet(ds_dir)
         .groupBy("order_month")
@@ -1203,21 +1171,17 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoting, and declared-schema parsing including exact double
     round-trips of s_acctbal."""
     pq = _t(spark, sf_dir, "supplier")
-    tag = _gen_tag(sf_dir, "supplier.parquet")
-    csv_dir = os.path.join(
-        _REPO_ROOT, ".cache", "csv", tag
+    csv_dir = _art.materialize(
+        _art.cache_dir("csv", _gen_tag(sf_dir, "supplier.parquet")),
+        lambda tmp: pq.write.option("header", "true").csv(tmp),
     )
-    # A bare isdir check would treat an interrupted write as a valid cache
-    # forever; Spark's _SUCCESS marker only exists for completed jobs.
-    if not os.path.isfile(os.path.join(csv_dir, "_SUCCESS")):
-        pq.write.mode("overwrite").option("header", "true").csv(csv_dir)
     return read_csv(spark, csv_dir, pq.schema, header=True).orderBy("s_suppkey")
 
 
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source/sink parity, end-to-end (Spark 4 NATIVE xml data
     source — no external spark-xml): write an XML copy of supplier
-    (cached per generation, _SUCCESS-gated like csv_roundtrip), read
+    (cached per generation like csv_roundtrip), read
     it back through the engine's schema'd XML reader, and hash-match
     the parquet truth — covers the interchange format regulated
     estates still mandate, including exact double round-trips of
@@ -1228,12 +1192,10 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pq = _t(spark, sf_dir, "supplier")
-    tag = _gen_tag(sf_dir, "supplier.parquet")
-    xml_dir = os.path.join(
-        _REPO_ROOT, ".cache", "xml", tag
+    xml_dir = _art.materialize(
+        _art.cache_dir("xml", _gen_tag(sf_dir, "supplier.parquet")),
+        lambda tmp: write_xml(pq, tmp, row_tag="supplier", root_tag="suppliers"),
     )
-    if not os.path.isfile(os.path.join(xml_dir, "_SUCCESS")):
-        write_xml(pq, xml_dir, row_tag="supplier", root_tag="suppliers")
     return read_xml(
         spark, xml_dir, row_tag="supplier", schema=pq.schema
     ).orderBy("s_suppkey")
@@ -1244,20 +1206,18 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format every public LLM corpus ships in), read it back through the
     engine's schema'd JSONL reader, and hash-match the parquet truth —
     exercises JSON string escaping (newlines, quotes, unicode) through a
-    full write→read cycle. Cached per testdata generation, _SUCCESS-gated
-    like csv_roundtrip."""
+    full write→read cycle. Cached per testdata generation like
+    csv_roundtrip."""
     from lab_etl_batch_data_processing_pipeline__spark.sources import (
         read_jsonl,
         write_jsonl,
     )
 
     pq = _t(spark, sf_dir, "documents")
-    tag = _gen_tag(sf_dir, "documents.parquet")
-    jl_dir = os.path.join(
-        _REPO_ROOT, ".cache", "jsonl", tag
+    jl_dir = _art.materialize(
+        _art.cache_dir("jsonl", _gen_tag(sf_dir, "documents.parquet")),
+        lambda tmp: write_jsonl(pq, tmp),
     )
-    if not os.path.isfile(os.path.join(jl_dir, "_SUCCESS")):
-        write_jsonl(pq, jl_dir)
     return read_jsonl(spark, jl_dir, pq.schema).orderBy("doc_id")
 
 
@@ -1270,83 +1230,16 @@ def q_curated_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py), and aggregate the slice. The DuckDB oracle
     computes the same month straight from the base tables, so a pruning
     bug that drops or duplicates a partition hash-mismatches. The write
-    is cached per testdata generation (mtime+size tag) behind an
-    explicit _CURATED_DONE marker with rename-publish — NOT _SUCCESS,
-    which dynamic partition overwrite never writes (the r12 dead-gate
-    fix): builders assemble in a pid-private sibling, stamp the marker,
-    and publish with an atomic os.rename; losers of the publish race
-    re-check the marker in a bounded retry loop (r12 ADVICE)."""
+    is cached per testdata generation (artifacts.materialize)."""
     from lab_etl_batch_data_processing_pipeline__spark.sources import write_parquet
 
-    tag = _gen_tag(sf_dir)
-    out_dir = os.path.join(
-        _REPO_ROOT, ".cache", "curated", tag
-    )
-    # Gate on an explicit marker, NOT _SUCCESS: dynamic partition
-    # overwrite leaves no root _SUCCESS (the artifacts.py sentinel
-    # rationale), so an _SUCCESS gate never passes and every call
-    # silently re-ran the curated join + 80-partition write — the
-    # "partition-pruned scan" key was ~85% write (measured 2.8 s build /
-    # 0.3 s scan at sf0.1). Build into a pid-private sibling and publish
-    # by rename, the q_parquet_upsert_roundtrip race protocol.
-    marker = os.path.join(out_dir, "_CURATED_DONE")
-    if not os.path.isfile(marker):
-        tmp_dir = f"{out_dir}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        # r13 ADVICE: a process dying between the stale-claim rename
-        # below and its follow-up rmtree/restore leaks a full
-        # '<out_dir>.stale.<pid>' dataset copy — sweep dead pids' leaks
-        # here at build entry (live racers' dirs are left alone).
-        _art.sweep_orphan_siblings(out_dir)
+    def build(tmp: str) -> None:
         curated = q_curated_join(spark, sf_dir).withColumn(
             "order_month", F.date_format("order_date", "yyyy-MM")
         )
-        write_parquet(curated, tmp_dir, partition_by=["order_month"])
-        open(os.path.join(tmp_dir, "_CURATED_DONE"), "w").close()
-        # Publish by atomic rename; on collision, re-check the marker
-        # inside a bounded retry loop (r12 ADVICE: the old single-shot
-        # "marker absent -> rmtree(out_dir)" had a TOCTOU where racer B
-        # could delete racer A's just-published complete dataset, and
-        # its follow-up rename was unguarded). Claiming the stale dir
-        # with a rename-away before deleting means a complete dataset
-        # published between the marker check and the claim is moved,
-        # detected by its marker, and restored — never rmtree'd.
-        for _ in range(5):
-            try:
-                os.rename(tmp_dir, out_dir)
-                break
-            except OSError:
-                pass
-            if os.path.isfile(marker):
-                # a concurrent builder published first — use its dataset
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                break
-            # out_dir exists without a marker: a stale partial (pre-fix
-            # _SUCCESS-era cache or a crashed pre-publish run). Claim it
-            # atomically, then re-check what we actually claimed.
-            claimed = f"{out_dir}.stale.{os.getpid()}"
-            try:
-                os.rename(out_dir, claimed)
-            except OSError:
-                continue  # another racer moved it first — retry publish
-            if os.path.isfile(os.path.join(claimed, "_CURATED_DONE")):
-                # raced-in complete dataset: put it back and use it
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                try:
-                    os.rename(claimed, out_dir)
-                except OSError:
-                    # yet another publisher won meanwhile; marker-gated
-                    # out_dir now exists, our claimed copy is redundant
-                    shutil.rmtree(claimed, ignore_errors=True)
-                break
-            shutil.rmtree(claimed, ignore_errors=True)
-        else:
-            if not os.path.isfile(marker):
-                raise OSError(
-                    f"could not publish curated cache to {out_dir} "
-                    "after 5 attempts and no complete dataset exists"
-                )
-            shutil.rmtree(tmp_dir, ignore_errors=True)
+        write_parquet(curated, tmp, partition_by=["order_month"])
+
+    out_dir = _art.materialize(_art.cache_dir("curated", _gen_tag(sf_dir)), build)
     sliced = spark.read.parquet(out_dir).filter(F.col("order_month") == "1995-03")
     return (
         sliced.groupBy("order_status")
@@ -1379,10 +1272,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a pid-scoped path keeps concurrent harness processes (bench +
     # correctness gate) from colliding on the boot lock. Stale dirs from
     # dead processes are swept at startup (sweep_stale_caches).
-    derby_root = os.path.join(
-        _REPO_ROOT, ".cache", "derby"
-    )
-    db = os.path.join(derby_root, f"{tag}-{os.getpid()}", "db")
+    db = _art.cache_dir("derby", f"{tag}-{os.getpid()}", "db")
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     # Overwrite-write every run: the write path IS half the test, and the
@@ -1461,12 +1351,7 @@ def q_csv_single_file(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
         )
     )
-    out_dir = os.path.join(
-        _REPO_ROOT,
-        ".cache",
-        "csv_single",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out_dir = _art.cache_dir("csv_single", os.path.basename(os.path.normpath(sf_dir)))
     write_csv_single_file(summary, out_dir)
     schema = T.StructType(
         [
@@ -2618,24 +2503,22 @@ def q_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     could salvage. FAILFAST would kill the job; DROPMALFORMED would
     silently lose the three lines; this is the production contract."""
     pq = _t(spark, sf_dir, "supplier")
-    tag = _gen_tag(sf_dir, "supplier.parquet")
-    dir_ = os.path.join(
-        _REPO_ROOT, ".cache", "csvq", tag
-    )
-    marker = os.path.join(dir_, "_QUARANTINE_READY")
-    if not os.path.isfile(marker):
-        pq.write.mode("overwrite").option("header", "true").csv(dir_)
+
+    def build(tmp: str) -> None:
+        pq.write.option("header", "true").csv(tmp)
         # injected bad part file; first line is a header (header=true
         # skips the first line of EVERY part file)
-        with open(os.path.join(dir_, "part-bad.csv"), "w") as fh:
+        with open(os.path.join(tmp, "part-bad.csv"), "w") as fh:
             fh.write(
                 "s_suppkey,s_name,s_nationkey,s_acctbal\n"
                 "999901,Bad#1,notanint,5.5\n"
                 "999903,Bad#3,7,notadouble\n"
                 "garbage line without commas\n"
             )
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
+
+    dir_ = _art.materialize(
+        _art.cache_dir("csvq", _gen_tag(sf_dir, "supplier.parquet")), build
+    )
     from lab_etl_batch_data_processing_pipeline__spark.sources import read_csv_quarantine
 
     good, bad = read_csv_quarantine(spark, dir_, pq.schema, header=True)
@@ -2769,7 +2652,7 @@ def q_tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink parity, end-to-end: write an ORC copy of part
-    (cached per testdata generation, _SUCCESS-gated like csv_roundtrip),
+    (cached per testdata generation like csv_roundtrip),
     read it back through the engine's ORC reader, and hash-match the
     parquet truth — covers the second big columnar interchange format
     (Hive-lineage estates) through a full write→scan cycle including
@@ -2777,12 +2660,10 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab_etl_batch_data_processing_pipeline__spark.sources import read_orc, write_orc
 
     pq = _t(spark, sf_dir, "part")
-    tag = _gen_tag(sf_dir, "part.parquet")
-    orc_dir = os.path.join(
-        _REPO_ROOT, ".cache", "orc", tag
+    orc_dir = _art.materialize(
+        _art.cache_dir("orc", _gen_tag(sf_dir, "part.parquet")),
+        lambda tmp: write_orc(pq, tmp),
     )
-    if not os.path.isfile(os.path.join(orc_dir, "_SUCCESS")):
-        write_orc(pq, orc_dir)
     return read_orc(spark, orc_dir).orderBy("p_partkey")
 
 
@@ -3602,26 +3483,18 @@ def q_supplier_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     sup = _t(spark, sf_dir, "supplier")
-    tag = _gen_tag(sf_dir, "supplier.parquet")
-    fix_dir = os.path.join(
-        _REPO_ROOT, ".cache", "incr", tag
+
+    def build(tmp: str) -> None:
+        sup.filter(F.col("s_suppkey") % 2 == 0).write.parquet(
+            os.path.join(tmp, "batch1")
+        )
+        sup.filter(F.col("s_suppkey") % 2 == 1).write.parquet(
+            os.path.join(tmp, "batch2")
+        )
+
+    fix_dir = _art.materialize(
+        _art.cache_dir("incr", _gen_tag(sf_dir, "supplier.parquet")), build
     )
-    if not os.path.isfile(os.path.join(fix_dir, "_FIXTURE_DONE")):
-        tmp_dir = f"{fix_dir}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        _art.sweep_orphan_siblings(fix_dir)  # dead builders' tmp/stale dirs
-        sup.filter(F.col("s_suppkey") % 2 == 0).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp_dir, "batch1"))
-        sup.filter(F.col("s_suppkey") % 2 == 1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp_dir, "batch2"))
-        open(os.path.join(tmp_dir, "_FIXTURE_DONE"), "w").close()
-        shutil.rmtree(fix_dir, ignore_errors=True)
-        try:
-            os.replace(tmp_dir, fix_dir)
-        except OSError:
-            shutil.rmtree(tmp_dir, ignore_errors=True)  # lost the race
     stage = tempfile.mkdtemp(prefix="incr_ingest_")
     try:
         manifest = os.path.join(stage, "ingest.manifest")

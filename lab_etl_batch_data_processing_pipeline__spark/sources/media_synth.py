@@ -105,24 +105,6 @@ def synth_avi(
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 
 
-def materialized_media(
-    spark: SparkSession, cache_dir: str, n_per_modality: int = 40
-) -> DataFrame:
-    """Parquet-materialized form of :func:`synthetic_media`: synthesize
-    once per cache_dir (_SUCCESS-gated, content is seed-deterministic so
-    the cache never goes stale), then serve every later call from the
-    parquet scan — both cheaper per call and truer to production, where
-    media arrives as binary columns read from storage, not driver-built
-    rows."""
-    import os
-
-    if not os.path.isfile(os.path.join(cache_dir, "_SUCCESS")):
-        synthetic_media(spark, n_per_modality).write.mode("overwrite").parquet(
-            cache_dir
-        )
-    return spark.read.parquet(cache_dir)
-
-
 def synthetic_media(spark: SparkSession, n_per_modality: int = 40) -> DataFrame:
     """The synthetic media table, MEDIA_SCHEMA-shaped: n images + n WAV
     clips + n BI_RGB AVI clips, ids 0..3n-1, all content seed-derived."""

@@ -234,24 +234,43 @@ def test_curated_scan_dynamic_partition_pruning(spark, curated_partitioned):
     )
 
 
-def test_curated_partition_scan_marker_gates_the_write(spark):
-    """Re-regression pin for the r12 dead-cache-gate fix (VERDICT r12
-    task 4): once the _CURATED_DONE marker exists, q_curated_partition_scan
-    must be a partition-pruned READ — the cached dataset untouched on
-    disk (no silent rebuild: the pre-fix _SUCCESS gate never passed, so
-    every call re-ran the curated join + 80-partition write and the
-    'scan' key was ~85% write) and no write node anywhere in the
-    returned plan."""
+#: registry keys whose first call builds a cache, and the cache family
+#: each publishes through artifacts.materialize
+_CACHED_BUILDS = {
+    "curated_partition_scan": "curated",
+    "parquet_upsert_roundtrip": "upsert",
+    "supplier_incremental_ingest": "incr",
+    "csv_roundtrip": "csv",
+    "xml_roundtrip": "xml",
+    "jsonl_roundtrip": "jsonl",
+    "orc_roundtrip": "orc",
+    "csv_quarantine": "csvq",
+    "multimodal_features": "media",
+    "ann_ivf_recall": "ann_gt",
+}
+
+
+@pytest.mark.parametrize("key", list(_CACHED_BUILDS))
+def test_curated_partition_scan_marker_gates_the_write(
+    spark, tmp_path, monkeypatch, key
+):
+    """Every cached build is marker-gated: the first call publishes its
+    cache with a _BUILT marker, and a second call is a pure READ that
+    rewrites no file of the cache tree. For the curated partition scan
+    the cached read is also partition-pruned with no write node in the
+    returned plan (an unpassable gate once made every call re-run the
+    curated join + 80-partition write, ~85% of the key's time)."""
+    import glob
     import os
 
-    from lab_etl_batch_data_processing_pipeline__spark import registry
+    from lab_etl_batch_data_processing_pipeline__spark import artifacts
 
-    # first call builds the cache (or reuses a prior build) + marker
-    registry.q_curated_partition_scan(spark, SF).collect()
-    out_dir = os.path.join(
-        registry._REPO_ROOT, ".cache", "curated", registry._gen_tag(SF)
-    )
-    assert os.path.isfile(os.path.join(out_dir, "_CURATED_DONE"))
+    monkeypatch.setattr(artifacts, "_REPO_ROOT", str(tmp_path))
+    query = entrymod.queries()[key]
+    query(spark, SF).collect()
+    cache = os.path.join(artifacts._REPO_ROOT, ".cache")
+    family = os.path.join(cache, _CACHED_BUILDS[key])
+    assert len(glob.glob(os.path.join(family, "*", "_BUILT"))) == 1
 
     def snapshot(d):
         files = {}
@@ -262,13 +281,14 @@ def test_curated_partition_scan_marker_gates_the_write(spark):
                 files[p] = (st.st_mtime_ns, st.st_size)
         return files
 
-    before = snapshot(out_dir)
-    df = registry.q_curated_partition_scan(spark, SF)
+    before = snapshot(cache)
+    df = query(spark, SF)
     df.collect()
-    assert snapshot(out_dir) == before, (
-        "marker-gated call rewrote the curated cache — the r12 dead "
-        "cache gate regressed"
+    assert snapshot(cache) == before, (
+        f"marker-gated call of {key} rewrote its cache"
     )
+    if key != "curated_partition_scan":
+        return
     plan = formatted_plan(df)
     scan_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan_lines and "order_month" in scan_lines[0] and "1995-03" in scan_lines[0]

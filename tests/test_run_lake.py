@@ -156,8 +156,10 @@ def test_lake_presentation_matches_sql_and_in_memory(spark, lake_run):
 
 
 def test_run_main_leaves_nothing_persisted(lake_run):
+    # no NEW persistent RDD: earlier tests' checkpointed RDDs may be
+    # released by Spark's ContextCleaner while run.main runs
     before, after = lake_run["persisted"]
-    assert after == before, f"run.main left RDDs persisted: {sorted(after - before)}"
+    assert after - before == set(), f"run.main left RDDs persisted: {sorted(after - before)}"
 
 
 def test_concurrent_writes_inherit_caller_job_group(lake_run):
