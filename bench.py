@@ -1,142 +1,12 @@
-"""Benchmark harness: times every headline query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
-
-Output contract (the driver captures a bounded TAIL of stdout, so the
-FINAL line must always fit — r6's single 1000+-char line got clipped
-and the round total was lost):
-  1. the FULL payload (incl. the per-query timing map) is written to
-     the sidecar file BENCH_FULL.json next to this script and echoed
-     to stderr, then
-  2. stdout gets EXACTLY ONE compact (<700 char) JSON line:
-     {"metric", "value", "unit", "sf", "startup_sec", "n_queries",
-      "n_errors", "queries_file"} plus, when present, "warm2_total"
-     and "load_warning" — always fits any tail buffer.
-
-The sidecar payload carries, per query, BOTH the cold first-run time
-("queries") and a warm re-run ("queries_warm2", every key by default
-since r16) plus start/end loadavg and a "load_warning" flag — a
-loaded-host run self-identifies and its warm numbers carry the
-regression signal (the r15 1.18× driver total was exactly this).
-
-Each query is materialized with the noop sink (full computation, no
-driver-side result transfer) so the number reflects engine work, not
-collect() serialization.
+"""Host-contention receipts for benchmark runs: ``_cpu_ticks`` (CPU
+steal from /proc/stat) and ``env_block`` (loadavg, memory, core count).
+``perfbench/run.py`` imports both to stamp every run with the state of
+the host it ran on.
 """
 
 from __future__ import annotations
 
-import gc
-import json
 import os
-import re
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-import __spark_entry__ as entrymod
-from lab_etl_batch_data_processing_pipeline__spark.session import get_spark
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-# Warm the SHARED codegen paths (vectorized parquet scan, hash aggregate,
-# exchanges, broadcast join, window, explode/higher-order functions) — a
-# small fixed subset, NOT the full registry, which would move every
-# query's first-compile cost out of its own timed window wholesale (the
-# r5 shape; see SCALE.md "Warm vs cold" for the measured A/B).
-WARM_KEYS = (
-    "avg_price_weekly",   # parquet scan + hash agg + exchange + sort
-    "curated_join",       # broadcast hash joins
-    "top_listings_topk",  # window function + rank filter
-    "doc_stats",          # text projection (regex + higher-order fns)
-    "token_frequencies",  # explode + aggregate
-    "minhash_near_dups",  # array fold + self equi-join
-)
-WARM_BUDGET_SEC = 20.0
-
-
-def warm_up(spark, sf_dir: str, warm_mode: str, phases: dict | None = None) -> None:
-    """JVM/codegen warmup, honestly bounded (time-capped so warmup cost
-    can't silently grow with the registry). Codegen for plans the subset
-    doesn't cover stays in that query's timed number. Modes: 'subset'
-    (default), 'full' (r5-style whole-registry warm, for A/B), 'none'.
-
-    ``phases`` (r14 verdict task 7): per-phase wall seconds recorded
-    into the payload's startup_breakdown so every round's startup_sec
-    is decomposable without re-instrumenting."""
-
-    def mark(key: str, since: float) -> float:
-        now = time.perf_counter()
-        if phases is not None:
-            phases[key] = round(now - since, 3)
-        return now
-
-    t = time.perf_counter()
-    # JIT spinup + the vectorized reader / hash-agg / exchange paths
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").groupBy("r_regionkey").count()\
-        .orderBy("r_regionkey").collect()
-    t = mark("warm_jit", t)
-    # Python/Arrow worker-pool spinup (shared infrastructure for every
-    # Pandas-UDF/mapInPandas path, e.g. the multimodal decoders): one
-    # trivial identity mapInPandas forks the daemon + worker processes
-    # and opens the Arrow channels WITHOUT pre-running any registry
-    # query's own logic.
-    if warm_mode != "none":
-        spark.range(64).repartition(8).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
-    t = mark("warm_arrow_workers", t)
-    warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_sf) or warm_mode == "none":
-        return
-    registry = entrymod.queries()
-    if warm_mode == "full":
-        try:
-            entrymod.prebuild_indexes(spark, warm_sf)
-        except Exception as exc:
-            print(f"WARNING: warmup prebuild failed: {exc}", file=sys.stderr)
-        warm_names = list(registry)
-        budget = float("inf")  # the A/B mode measures the r5 shape as-was
-    else:
-        warm_names = [k for k in WARM_KEYS if k in registry]
-        budget = WARM_BUDGET_SEC
-    warm_start = time.perf_counter()
-    for name in warm_names:
-        if time.perf_counter() - warm_start > budget:
-            print(
-                f"WARNING: warmup budget ({budget}s) hit at "
-                f"{name}; remaining plans compile in their timed runs",
-                file=sys.stderr,
-            )
-            break
-        try:
-            materialize(registry[name](spark, warm_sf))
-        except Exception as exc:
-            print(f"WARNING: warmup {name} failed: {exc}", file=sys.stderr)
-    t = mark("warm_codegen_subset", t)
-    # Stateful-streaming warm at sf0.01, NOT sf0.001: the micro-batch
-    # planner + state store + applyInPandasWithState Arrow-state paths
-    # only cross C2 JIT compile thresholds under real volume — an
-    # sf0.001 replay leaves the first sf0.1 streaming row paying ~9 s
-    # of interpreted execution (measured 11.6 s with an sf0.001 warm
-    # vs ~3 s re-run). Shared infrastructure for all streaming rows;
-    # still inside the warmup budget and counted in startup_sec.
-    warm01 = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-    if (
-        warm_mode == "subset"
-        and os.path.isdir(warm01)
-        and "streaming_user_totals" in registry
-        and time.perf_counter() - warm_start <= budget
-    ):
-        try:
-            materialize(registry["streaming_user_totals"](spark, warm01))
-        except Exception as exc:
-            print(f"WARNING: streaming warmup failed: {exc}", file=sys.stderr)
-    mark("warm_streaming_state", t)
 
 
 def _cpu_ticks(stat_line: str | None = None) -> tuple[int, int] | None:
@@ -191,252 +61,3 @@ def env_block(spark) -> dict:
     except Exception:
         pass
     return env
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    match = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(match.group(1)) if match else -1.0
-
-    # Pre-boot loadavg: the ONLY reading that reflects the HOST rather
-    # than the bench itself (spark boot + warmup are 20-30 s of
-    # 32-thread work, enough to push the 1-minute loadavg past 2 on an
-    # idle machine — measured 2.72 after warmup on a 0.0-loadavg host).
-    try:
-        la_preboot = round(os.getloadavg()[0], 2)
-    except OSError:
-        la_preboot = None
-    steal0 = _cpu_ticks()
-
-    t0 = time.perf_counter()
-    phases: dict = {}
-    spark = get_spark("lab-etl-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    phases["spark_boot"] = round(time.perf_counter() - t0, 3)
-    warm_up(spark, sf_dir, os.environ.get("SPARK_GRAFT_WARM", "subset"), phases)
-    t_prebuild = time.perf_counter()
-    # Materialize the IVF ANN index if absent (an offline build job at
-    # scale — the benched query is the probe path, matching how an IVF
-    # index is actually operated). Counted in startup_sec, not query time.
-    try:
-        entrymod.prebuild_indexes(spark, sf_dir)
-    except Exception as exc:  # index-less queries still run (they build inline)
-        print(
-            f"WARNING: prebuild_indexes failed ({type(exc).__name__}: {exc}); "
-            "IVF queries will build their index inline (timed)",
-            file=sys.stderr,
-        )
-    phases["prebuild_indexes"] = round(time.perf_counter() - t_prebuild, 3)
-    startup = time.perf_counter() - t0
-    env_at_start = env_block(spark)
-    if la_preboot is not None:
-        env_at_start["loadavg_1m_preboot"] = la_preboot
-
-    # SPARK_GRAFT_BENCH_REPEAT=n re-runs each query n times and records
-    # the MINIMUM — for local A/Bs where steady-state matters more than
-    # the first-execution number. The official per-round figure stays
-    # n=1 (first run in a warm session — what a user actually pays).
-    repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name, fn in entrymod.queries().items():
-        # Flush Python GC OUTSIDE the timed window: a gen-2 collection
-        # firing mid-query runs weakref finalizers for every dead frame
-        # accumulated since the last collection (cache unpersists, py4j
-        # detaches — thousands of JVM round-trips), randomly taxing
-        # whichever small query it lands in (observed: 0.8 s queries
-        # reading 5-6 s in-bench). Inter-query cleanup is not query work.
-        runs = []
-        for _ in range(repeat):
-            gc.collect()
-            start = time.perf_counter()
-            try:
-                materialize(fn(spark, sf_dir))
-                runs.append(round(time.perf_counter() - start, 3))
-            except Exception as exc:  # one broken query must not kill the bench
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                break
-        if runs:
-            timings[name] = min(runs)
-
-    # Warm-receipt second pass (r12, noise control; widened to EVERY
-    # query in r16 — r15 verdict task 2): the single-run total above
-    # swings ~±20% run-to-run on unchanged code (SCALE.md "Bench
-    # variance"), and the r15 driver round proved the failure mode —
-    # a loaded host inflated the cold total 1.18× and cost a full
-    # triage cycle that only the warm re-runs could settle. Re-running
-    # every key once more gives each a steady-state receipt
-    # ("queries_warm2") alongside its cold number in BENCH_FULL.json;
-    # a real regression shows in BOTH numbers, host noise in only one.
-    # The official driver metric stays the first-run total.
-    # SPARK_GRAFT_BENCH_WARM2: default/'1'/'all' = every key,
-    # 'top20' = the pre-r16 top-20-only pass, '0' = off.
-    warm2: dict[str, float] = {}
-    warm2_mode = os.environ.get("SPARK_GRAFT_BENCH_WARM2", "all")
-    if warm2_mode != "0" and repeat == 1:
-        registry = entrymod.queries()
-        if warm2_mode == "top20":
-            rerun = sorted(timings.items(), key=lambda kv: -kv[1])[:20]
-        else:
-            rerun = list(timings.items())
-        for name, _ in rerun:
-            gc.collect()
-            start = time.perf_counter()
-            try:
-                materialize(registry[name](spark, sf_dir))
-                warm2[name] = round(time.perf_counter() - start, 3)
-            except Exception as exc:
-                errors[f"warm2:{name}"] = f"{type(exc).__name__}: {exc}"[:200]
-
-    # Min-of-5 warm receipts (r18 verdict task 1, additions-only): every
-    # r18-era full-bench run — six of them — self-flagged hypervisor
-    # steal, so no single-shot total from that era is trustworthy. The
-    # robust per-key number under a BURSTY co-tenant is the minimum over
-    # several interleaved warm passes (a burst inflates some passes; the
-    # min survives unless contention is continuous, which the steal
-    # receipt would then show). Applied to the heaviest keys only (they
-    # carry the regression signal; sub-second keys have stable warm2):
-    # "queries_min5" = min over warm2 + 4 more full warm sweeps, for the
-    # top SPARK_GRAFT_BENCH_MIN5 (default 25) keys by warm2. Passes are
-    # interleaved key-by-key so one burst cannot poison all 5 runs of a
-    # key. Cold totals, warm2, and the stdout contract are untouched.
-    min5: dict[str, float] = {}
-    min5_mode = os.environ.get("SPARK_GRAFT_BENCH_MIN5", "25")
-    if min5_mode != "0" and repeat == 1 and warm2:
-        try:
-            top_n = int(min5_mode)
-        except ValueError:
-            top_n = 25
-        registry = entrymod.queries()
-        min5_keys = [
-            k for k, _ in sorted(warm2.items(), key=lambda kv: -kv[1])[:top_n]
-        ]
-        min5 = {k: warm2[k] for k in min5_keys}
-        for _ in range(4):
-            for name in min5_keys:
-                gc.collect()
-                start = time.perf_counter()
-                try:
-                    materialize(registry[name](spark, sf_dir))
-                    min5[name] = min(
-                        min5[name], round(time.perf_counter() - start, 3)
-                    )
-                except Exception as exc:
-                    errors[f"min5:{name}"] = f"{type(exc).__name__}: {exc}"[:200]
-
-    total = round(sum(timings.values()), 3)
-    payload = {
-        "metric": "total_query_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "startup_sec": round(startup, 3),
-        "startup_breakdown": phases,
-        "env": env_at_start,
-    }
-    try:
-        payload["env"]["loadavg_1m_end"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
-    steal1 = _cpu_ticks()
-    steal_pct = None
-    if steal0 and steal1 and steal1[1] > steal0[1]:
-        steal_pct = round(
-            100.0 * (steal1[0] - steal0[0]) / (steal1[1] - steal0[1]), 2
-        )
-        payload["env"]["cpu_steal_pct_during_run"] = steal_pct
-    # Loadavg guard (r15 verdict task 2): a run that STARTS on a loaded
-    # host self-identifies in its own payload, so a wrong-way total is
-    # triaged in one glance instead of a round-trip. Threshold 2.0: the
-    # r15 load artifact started at 5.6; idle runs start well under 1.
-    # Only the PRE-BOOT loadavg gates — both the post-warmup and end
-    # values are recorded for context but are self-generated (the
-    # bench's own 32-thread boot/warmup/executors push the 1-minute
-    # loadavg past 2 even on an idle host), so gating on either would
-    # flag every run.
-    la_start = (
-        la_preboot
-        if la_preboot is not None
-        else env_at_start.get("loadavg_1m")
-    )
-    warnings = []
-    if la_start is not None and la_start >= 2.0:
-        warnings.append(
-            f"host already loaded before spark boot (loadavg_1m = {la_start})"
-        )
-    # a co-tenant ramping up MID-run is invisible to the preboot check;
-    # hypervisor steal share during the run is the direct receipt.
-    # Threshold 1%, calibrated on this VM: a clean 251 s run measured
-    # 0.23% and an idle machine 0.006%, while a 359 s diffusely
-    # inflated run (same code, idle preboot) measured 3.68% — steal in
-    # the low single digits already means real contention windows.
-    if steal_pct is not None and steal_pct >= 1.0:
-        warnings.append(
-            f"hypervisor stole {steal_pct}% of cpu during the run"
-        )
-    if warnings:
-        payload["load_warning"] = (
-            "; ".join(warnings) + " — cold timings are load-confounded; "
-            "read queries_warm2 for regression evidence"
-        )
-        print(f"WARNING: {payload['load_warning']}", file=sys.stderr)
-    if warm2:
-        payload["queries_warm2"] = warm2
-        payload["warm2_total"] = round(sum(warm2.values()), 3)
-    if min5:
-        payload["queries_min5"] = min5
-        payload["min5_total"] = round(sum(min5.values()), 3)
-    if errors:
-        payload["errors"] = errors
-    full_line = json.dumps(payload)
-    repo = os.path.dirname(os.path.abspath(__file__))
-    sidecars = [os.path.join(repo, "BENCH_FULL.json")]
-    # Round-stamped copy so per-round per-query history doesn't depend
-    # on git archaeology of the mutable BENCH_FULL.json: the round is
-    # SPARK_GRAFT_ROUND if set, else inferred as (highest driver-written
-    # BENCH_r{N}.json) + 1 — the round currently being built. Caveat:
-    # a re-run AFTER the driver has already captured this round's
-    # BENCH_r{N}.json infers N+1 and mislabels the sidecar until the
-    # real next-round run overwrites it — set SPARK_GRAFT_ROUND when
-    # reproducing timings post-capture.
-    round_no = os.environ.get("SPARK_GRAFT_ROUND")
-    if round_no is not None and round_no.isdigit():
-        round_no = f"{int(round_no):02d}"
-    if round_no is None:
-        seen = [
-            int(m.group(1))
-            for f in os.listdir(repo)
-            if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-        ]
-        round_no = f"{max(seen) + 1:02d}" if seen else None
-    if round_no is not None:
-        sidecars.append(os.path.join(repo, f"BENCH_FULL_r{round_no}.json"))
-    for sidecar in sidecars:
-        try:
-            with open(sidecar, "w") as fh:
-                fh.write(full_line + "\n")
-        except OSError as exc:
-            print(f"WARNING: could not write {sidecar}: {exc}", file=sys.stderr)
-    print(full_line, file=sys.stderr)
-    summary = {
-        "metric": "total_query_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "startup_sec": round(startup, 3),
-        "n_queries": len(timings),
-        "n_errors": len(errors),
-        "queries_file": "BENCH_FULL.json",
-    }
-    if "load_warning" in payload:
-        summary["load_warning"] = payload["load_warning"]
-    if warm2:
-        summary["warm2_total"] = payload["warm2_total"]
-    if min5:
-        summary["min5_total"] = payload["min5_total"]
-    print(json.dumps(summary))
-
-
-if __name__ == "__main__":
-    main()

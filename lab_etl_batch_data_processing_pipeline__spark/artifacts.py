@@ -295,12 +295,11 @@ def _gen_tag(sf_dir: str, src: str = "orders.parquet") -> str:
 _TOKSKETCH_LB = 10
 
 #: The two MinHash-signature parameterizations the registry uses:
-#: portable md5/3-gram shingles (q_minhash_near_dups, oracle-matched)
-#: and portable md5/unigram (corpus_prep_auto's dense route — portable
-#: since r10 so the routed branch has a DuckDB value-hash twin).
+#: 3-gram shingles (q_minhash_near_dups) and unigrams (corpus_prep_auto's
+#: dense route). Both are the md5 family, which the oracles replay.
 _MINHASH_SIG_VARIANTS = (
-    {"num_hashes": 32, "shingle_size": 3, "portable": True},
-    {"num_hashes": 32, "shingle_size": 1, "portable": True},
+    {"num_hashes": 32, "shingle_size": 3},
+    {"num_hashes": 32, "shingle_size": 1},
 )
 
 
@@ -320,12 +319,12 @@ def _toksketch_dir(sf_dir: str) -> str:
     )
 
 
-def _minhash_sig_dir(
-    sf_dir: str, num_hashes: int, shingle_size: int, portable: bool
-) -> str:
+def _minhash_sig_dir(sf_dir: str, num_hashes: int, shingle_size: int) -> str:
     """Cache dir for one MinHash-signature parameterization of the
-    documents table — same layout contract as _toksketch_dir."""
-    variant = f"nh{num_hashes}-sh{shingle_size}-{'md5' if portable else 'xx'}"
+    documents table — same layout contract as _toksketch_dir. The
+    ``-md5`` suffix names the hash family, kept so existing caches are
+    reused."""
+    variant = f"nh{num_hashes}-sh{shingle_size}-md5"
     return cache_dir(
         "minhashsig", variant, _gen_tag(sf_dir, "documents.parquet")
     )
@@ -347,11 +346,10 @@ def _doc_sigs(
     sf_dir: str,
     num_hashes: int = 32,
     shingle_size: int = 3,
-    portable: bool = True,
 ) -> DataFrame | None:
     """The materialized MinHash signatures for one parameterization if
     built, else None — same contract as _doc_sketch."""
-    d = _minhash_sig_dir(sf_dir, num_hashes, shingle_size, portable)
+    d = _minhash_sig_dir(sf_dir, num_hashes, shingle_size)
     if os.path.isfile(os.path.join(d, "_BUILT")):
         return spark.read.parquet(os.path.join(d, "sigs"))
     return None

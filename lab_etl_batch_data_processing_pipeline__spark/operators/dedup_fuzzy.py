@@ -13,16 +13,12 @@ only the candidates.
 - :func:`simhash` token-hash sign-sum sketch; hamming-close pairs are
   near-dups.
 
-MinHash and SimHash each have two hashing modes:
-
-- ``portable=True`` (default): the base hash is md5-derived (first 60
-  bits of the digest), re-seeded with an inlined universal-hash family
-  ``(a_i * h + b_i) mod (2^31 - 1)``. Every term is plain integer
-  arithmetic on a standard md5, so any engine reproduces the sketches
-  bit-for-bit — this is what makes the operators oracle-checkable
-  (same pattern as the md5 winnowing fingerprints below).
-- ``portable=False``: xxhash64 (JVM-side, no digest-string step) — the
-  fast path when cross-engine reproducibility is not required.
+MinHash and SimHash share one hash family: the base hash is md5-derived
+(first 60 bits of the digest); MinHash re-seeds it with an inlined
+universal-hash family ``(a_i * h + b_i) mod (2^31 - 1)``. Every term is
+plain integer arithmetic on a standard md5, so any engine reproduces
+the sketches bit-for-bit — this is what makes the operators
+oracle-checkable (same pattern as the md5 winnowing fingerprints below).
 """
 
 from __future__ import annotations
@@ -35,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.text_funcs import normalized_text
 from .layout import ensure_parallelism
 
-#: Modulus of the portable universal-hash family: the Mersenne prime
+#: Modulus of the MinHash universal-hash family: the Mersenne prime
 #: 2^31 - 1. Base hashes and multipliers are < 2^31, so a_i * h < 2^62
 #: never overflows a signed 64-bit long (ANSI-mode safe in Spark, and
 #: identical in any engine with int64 arithmetic).
@@ -81,7 +77,7 @@ def _check_artifact(df: DataFrame, col_name: str, expected: dict, what: str) -> 
 
 
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
-    """Deterministic (a_i, b_i) pairs for the portable hash family.
+    """Deterministic (a_i, b_i) pairs for the MinHash hash family.
 
     Derived from md5 of fixed strings (no RNG state), so the Spark
     expression and any oracle SQL can inline the exact same literals.
@@ -630,19 +626,26 @@ def _shingles(text_col, n: int = 3):
     return _shingle_expr(toks, n)
 
 
+def _sig_params(num_hashes: int, shingle_size: int) -> dict:
+    """Build params stamped on (and checked against) MinHash signatures.
+    ``portable`` stays a constant True: it names the md5 hash family, so
+    signatures materialized before the xxhash64 family was retired
+    still validate and any frame stamped ``portable: False`` is refused."""
+    return {"num_hashes": num_hashes, "shingle_size": shingle_size, "portable": True}
+
+
 def minhash_signatures(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_size: int = 3,
-    portable: bool = True,
 ) -> DataFrame:
     """Per-document MinHash signature: array of ``num_hashes`` minima.
 
-    Each shingle is hashed once (md5-derived 31-bit when ``portable``,
-    xxhash64 otherwise); the signature element i is the min over the
-    doc's shingle set of the i-th re-seeded hash. Computed as two
+    Each shingle is hashed once (md5-derived 31-bit); the signature
+    element i is the min over the doc's shingle set of the i-th
+    re-seeded hash. Computed as two
     chained projections with higher-order functions — no shuffle, no
     UDF, no exploding the shingle set into rows (an explode would
     multiply the scan by ~|shingles|).
@@ -659,55 +662,38 @@ def minhash_signatures(
     """
     documents = ensure_parallelism(documents)
     sh = _shingles(F.col(text_col), shingle_size)
-    if portable:
-        params = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in minhash_params(num_hashes)
-            ]
-        )
-        sig = F.aggregate(
-            F.transform(sh, _md5_hash31),
-            F.expr(f"array_repeat({MINHASH_P}L, {num_hashes})"),
-            lambda acc, h: F.zip_with(
-                acc, params, lambda m, p: F.least(m, (p["a"] * h + p["b"]) % MINHASH_P)
-            ),
-        )
-    else:
-        max_long = (1 << 63) - 1
-        seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-        sig = F.aggregate(
-            F.transform(sh, lambda s: F.xxhash64(s)),
-            F.expr(f"array_repeat({max_long}L, {num_hashes})"),
-            lambda acc, h: F.zip_with(
-                acc, seeds, lambda m, i: F.least(m, F.xxhash64(h, i))
-            ),
-        )
+    params = F.array(
+        *[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for a, b in minhash_params(num_hashes)
+        ]
+    )
+    sig = F.aggregate(
+        F.transform(sh, _md5_hash31),
+        F.expr(f"array_repeat({MINHASH_P}L, {num_hashes})"),
+        lambda acc, h: F.zip_with(
+            acc, params, lambda m, p: F.least(m, (p["a"] * h + p["b"]) % MINHASH_P)
+        ),
+    )
     return documents.select(
         F.col(id_col).alias("doc_id"),
         sig.alias(
             # build-param stamp (the token_sketch/_check_artifact contract):
-            # LSH consumers reject signatures built with a different family
+            # LSH consumers reject signatures built with other params
             "signature",
-            metadata={
-                ARTIFACT_META_KEY: {
-                    "num_hashes": num_hashes,
-                    "shingle_size": shingle_size,
-                    "portable": portable,
-                }
-            },
+            metadata={ARTIFACT_META_KEY: _sig_params(num_hashes, shingle_size)},
         ),
         F.size(sh).alias("n_shingles"),
     )
 
 
-def _banded(sigs: DataFrame, bands: int, r: int, portable: bool) -> DataFrame:
+def _banded(sigs: DataFrame, bands: int, r: int) -> DataFrame:
     """Explode per-doc signatures into ``bands`` (band_id, band_hash) rows.
 
-    Bounded fan-out (``bands`` rows per doc); the band hash covers the
-    band's ``r`` consecutive signature slots, so an equi-join or groupBy
-    on (band_id, band_hash) realizes the classic LSH bucket structure."""
-    band_hash_fn = F.md5 if portable else F.xxhash64
+    Bounded fan-out (``bands`` rows per doc); the band hash (md5) covers
+    the band's ``r`` consecutive signature slots, so an equi-join or
+    groupBy on (band_id, band_hash) realizes the classic LSH bucket
+    structure."""
     return sigs.select(
         "doc_id",
         "signature",
@@ -716,7 +702,7 @@ def _banded(sigs: DataFrame, bands: int, r: int, portable: bool) -> DataFrame:
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda band: F.struct(
                     band.alias("band_id"),
-                    band_hash_fn(
+                    F.md5(
                         F.concat_ws(
                             "|",
                             F.transform(
@@ -729,6 +715,27 @@ def _banded(sigs: DataFrame, bands: int, r: int, portable: bool) -> DataFrame:
             )
         ).alias("band"),
     ).select("doc_id", "signature", "band.band_id", "band.band_hash")
+
+
+def _signatures(
+    documents: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_size: int,
+    sigs: DataFrame | None,
+) -> DataFrame:
+    """The LSH consumers' signature input: ``sigs`` checked against the
+    consumer's params when precomputed, else built inline."""
+    if sigs is None:
+        return minhash_signatures(
+            documents, id_col, text_col, num_hashes, shingle_size
+        )
+    _check_artifact(
+        sigs, "signature", _sig_params(num_hashes, shingle_size),
+        "minhash_signatures",
+    )
+    return ensure_parallelism(sigs)
 
 
 def pick_bands(num_hashes: int, threshold: float) -> int:
@@ -748,7 +755,6 @@ def minhash_bucket_dedup(
     bands: int | None = None,
     shingle_size: int = 3,
     threshold: float = 0.5,
-    portable: bool = True,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup drop set by LSH-bucket canonicalization: (doc_id,) of
@@ -774,20 +780,8 @@ def minhash_bucket_dedup(
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
     r = num_hashes // bands
-    if sigs is None:
-        sigs = minhash_signatures(
-            documents, id_col, text_col, num_hashes, shingle_size, portable
-        )
-    else:
-        _check_artifact(
-            sigs,
-            "signature",
-            {"num_hashes": num_hashes, "shingle_size": shingle_size,
-             "portable": portable},
-            "minhash_signatures",
-        )
-        sigs = ensure_parallelism(sigs)
-    banded = _banded(sigs, bands, r, portable).select("doc_id", "band_id", "band_hash")
+    sigs = _signatures(documents, id_col, text_col, num_hashes, shingle_size, sigs)
+    banded = _banded(sigs, bands, r).select("doc_id", "band_id", "band_hash")
     bucket_min = banded.groupBy("band_id", "band_hash").agg(
         F.min("doc_id").alias("min_id")
     )
@@ -807,7 +801,6 @@ def minhash_near_dups(
     bands: int = 8,
     shingle_size: int = 3,
     threshold: float = 0.5,
-    portable: bool = True,
     sort: bool = True,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
@@ -822,7 +815,7 @@ def minhash_near_dups(
 
     ``sigs`` takes precomputed :func:`minhash_signatures` output
     (possibly parquet-materialized) built with the SAME
-    num_hashes/shingle_size/portable — signatures are the dominant cost
+    num_hashes/shingle_size — signatures are the dominant cost
     (one string-hash per shingle over the whole corpus), so sharing one
     materialized signature table across every LSH consumer is the
     at-scale shape (the token_sketch contract).
@@ -830,21 +823,8 @@ def minhash_near_dups(
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
     r = num_hashes // bands
-    if sigs is None:
-        sigs = minhash_signatures(
-            documents, id_col, text_col, num_hashes, shingle_size, portable
-        )
-    else:
-        _check_artifact(
-            sigs,
-            "signature",
-            {"num_hashes": num_hashes, "shingle_size": shingle_size,
-             "portable": portable},
-            "minhash_signatures",
-        )
-        sigs = ensure_parallelism(sigs)
-
-    banded = _banded(sigs, bands, r, portable).select(
+    sigs = _signatures(documents, id_col, text_col, num_hashes, shingle_size, sigs)
+    banded = _banded(sigs, bands, r).select(
         "doc_id", "signature", "band_id", "band_hash"
     )
 
@@ -883,99 +863,76 @@ def simhash(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash over the token set: bit b of the sketch is the sign of
     the sum over tokens of (+1 if token-hash bit b else -1).
 
-    ``portable=True``: 60-bit sketch from the first 60 md5 bits of each
-    token — engine-independent, oracle-checkable. Shape: explode tokens
-    to ROWS (no bit fan-out), then ONE hash aggregate per doc over 15
-    packed-counter longs — each long carries 4 15-bit bit-popcounts, so
-    the 60 per-bit counts sum as 15 ordinary SUM columns (plus a token
+    60-bit sketch from the first 60 md5 bits of each token —
+    engine-independent, oracle-checkable. Shape: explode tokens to ROWS
+    (no bit fan-out), then ONE hash aggregate per doc over 30
+    packed-counter longs — each long carries 2 31-bit bit-popcounts, so
+    the 60 per-bit counts sum as 30 ordinary SUM columns (plus a token
     COUNT), and a final projection decodes sign bits into the sketch:
-    ``s_b > 0  <=>  2 * popcount_b > n_tokens``. One shuffle of
-    17 tiny columns instead of the previous 60x row fan-out through a
-    (doc, bit) aggregate + second shuffle. The two rejected shapes, both
-    measured: a HOF fold with a 60-counter array accumulator pays ~7 s
-    of one-time whole-stage-codegen (giant generated class near janino's
-    method-size cliff); 60 *separate* SUM columns in one HashAggregate
-    pays a similar compile tax (the round-1 wide-aggregate receipt in
-    SCALE.md). 15-bit counters bound the portable path at 32 767
-    distinct tokens per document (~200 KB+ of unique-word text) —
-    beyond that use ``portable=False``, which has no such bound.
+    ``s_b > 0  <=>  2 * popcount_b > n_tokens``. One shuffle of 32 tiny
+    columns instead of a 60x row fan-out through a (doc, bit) aggregate
+    + second shuffle. The two rejected shapes, both measured: a HOF fold
+    with a 60-counter array accumulator pays ~7 s of one-time
+    whole-stage-codegen (giant generated class near janino's method-size
+    cliff); 60 *separate* SUM columns in one HashAggregate pays a similar
+    compile tax (the round-1 wide-aggregate receipt in SCALE.md).
 
-    ``portable=False``: 63-bit sketch from xxhash64 via one HOF fold
-    (63 not 64 so the fold ``acc*2 + bit`` never overflows a signed
-    long under ANSI mode) — compact enough to codegen cheaply. Near-dups
-    have hamming-close sketches; pairing is a bucket join on sketch
-    prefixes (not materialized here).
+    A 31-bit counter cannot overflow: a Spark array holds fewer than
+    2^31 elements, so no document has more than 2^31 - 1 distinct
+    tokens, and the high counter keeps each packed sum under 2^62.
+    Near-dups have hamming-close sketches; pairing is a bucket join on
+    sketch prefixes (not materialized here).
     """
+    width, slots, n_packs = 31, 2, 30  # 60 counters: 2 x 31-bit per long
     toks = _token_set(F.col(text_col))
-    if portable:
-        width, slots, n_packs = 15, 4, 15  # 60 counters: 4 x 15-bit per long
-        base = ensure_parallelism(
-            documents.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
-        )
-        rows = base.select("doc_id", F.explode("toks").alias("t")).select(
-            "doc_id",
-            F.conv(F.substring(F.md5("t"), F.lit(1), F.lit(15)), 16, 10)
-            .cast("long")
-            .alias("h"),
-        )
-        # Counter c (= bit index b, 0..59) lives in long b//slots at slot
-        # b%slots. Constant shift distances, so plain SQL operators work.
-        packs = [
-            F.expr(
-                " + ".join(
-                    f"(((h >> {59 - (j * slots + i)}) & 1) << {width * i})"
-                    for i in range(slots)
-                )
-            ).alias(f"p{j}")
-            for j in range(n_packs)
-        ]
-        agged = (
-            rows.select("doc_id", *packs)
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(f"p{j}").alias(f"p{j}") for j in range(n_packs)],
-            )
-        )
-        mask = (1 << width) - 1
-        sketch = F.expr(
+    base = ensure_parallelism(
+        documents.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    )
+    rows = base.select("doc_id", F.explode("toks").alias("t")).select(
+        "doc_id",
+        F.conv(F.substring(F.md5("t"), F.lit(1), F.lit(15)), 16, 10)
+        .cast("long")
+        .alias("h"),
+    )
+    # Counter c (= bit index b, 0..59) lives in long b//slots at slot
+    # b%slots. Constant shift distances, so plain SQL operators work.
+    packs = [
+        F.expr(
             " + ".join(
-                f"(CASE WHEN 2 * ((p{b // slots} >> {width * (b % slots)})"
-                f" & {mask}) > n THEN {1 << (59 - b)}L ELSE 0L END)"
-                for b in range(60)
+                f"(((h >> {59 - (j * slots + i)}) & 1) << {width * i})"
+                for i in range(slots)
             )
-        ).alias("simhash")
-        sketches = agged.select("doc_id", sketch)
-        # Empty/whitespace-only docs have no token rows: restore them with
-        # the all-negative-sums sketch (0), matching the fold semantics.
-        return (
-            documents.select(F.col(id_col).alias("doc_id"))
-            .join(sketches, "doc_id", "left")
-            .na.fill(0, ["simhash"])
-        )
-    bit_idx = F.sequence(F.lit(0), F.lit(62))
-    bit_sums = F.reverse(
-        F.aggregate(
-            F.transform(toks, lambda t: F.xxhash64(t)),
-            F.expr("array_repeat(0, 63)"),
-            lambda acc, h: F.zip_with(
-                acc,
-                bit_idx,
-                lambda s, b: s + F.when(F.bit_get(h, b) == 1, 1).otherwise(-1),
-            ),
+        ).alias(f"p{j}")
+        for j in range(n_packs)
+    ]
+    agged = (
+        rows.select("doc_id", *packs)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(f"p{j}").alias(f"p{j}") for j in range(n_packs)],
         )
     )
-    sketch = F.aggregate(
-        bit_sums,
-        F.lit(0).cast("long"),
-        lambda acc, s: acc * 2 + F.when(s > 0, 1).otherwise(0),
+    mask = (1 << width) - 1
+    sketch = F.expr(
+        " + ".join(
+            f"(CASE WHEN 2 * ((p{b // slots} >> {width * (b % slots)})"
+            f" & {mask}) > n THEN {1 << (59 - b)}L ELSE 0L END)"
+            for b in range(60)
+        )
+    ).alias("simhash")
+    sketches = agged.select("doc_id", sketch)
+    # Empty/whitespace-only docs have no token rows: restore them with
+    # the all-negative-sums sketch (0).
+    return (
+        documents.select(F.col(id_col).alias("doc_id"))
+        .join(sketches, "doc_id", "left")
+        .na.fill(0, ["simhash"])
     )
-    return documents.select(F.col(id_col).alias("doc_id"), sketch.alias("simhash"))
 
 
 def winnowing_fingerprints(

@@ -209,77 +209,23 @@ def portable_plane_weights(
     return out
 
 
-def _hyperplane_bucket(
-    vec,
-    num_planes: int,
-    table: int,
-    portable: bool = False,
-    dim: int | None = None,
-    weights=None,
-):
-    """Sign-pattern bucket id for a vector under ``num_planes`` pseudo-random
-    hyperplanes (plane p, dim d weight = a deterministic hash in [-1,1)).
-
-    The weight for (table, plane, dim) is derived from a hash.
-    ``portable=False`` (default) uses xxhash64 evaluated per row — the
-    JVM fast path, no side data at all; ``portable=True`` expects the
-    precomputed matrix bound as a ``weights=`` array column (in
-    :func:`cosine_topk_lsh`, one broadcast 1-row frame), falling back to
-    a literal matrix built from ``dim=`` when no column is supplied.
-    The portable weight is the first 60 md5 bits of
-    "table|plane|dim" (the dedup_fuzzy._md5_hash31 recipe), which DuckDB
-    reproduces exactly — the form that makes the WHOLE LSH top-k
-    value-hash oracle-able, not just recall-gated.
-    """
-    if portable:
-        # The weight matrix depends only on (table, plane, dim), so it is
-        # PRECOMPUTED driver-side with hashlib (same recipe the DuckDB
-        # twin evaluates in SQL: first 60 md5 bits of "t|p|d" mapped to
-        # [-1, 1)). Callers bind it as a single array<array<double>>
-        # column via ``weights`` (a broadcast 1-row frame in
-        # :func:`cosine_topk_lsh`) — binding it as num_planes*dim
-        # F.lit() nodes instead costs a fixed ~2x plan/codegen overhead
-        # at sf0.1 (the r10 ann_cosine_lsh perf flag), which a single
-        # Literal-backed column avoids while keeping the bucket
-        # expression pure zip_with arithmetic, no per-row string
-        # hashing and nothing data-size-dependent.
-        if weights is None:
-            if dim is None:
-                raise ValueError(
-                    "portable hyperplane buckets need weights= (bound "
-                    "array column) or dim= to build the weight matrix"
-                )
-            weights = F.lit(portable_plane_weights(table, num_planes, dim))
-
-        bucket = F.lit(0).cast("long")
-        for p in range(num_planes):
-            w = F.element_at(weights, p + 1)
-            dot = F.aggregate(
-                F.zip_with(vec, w, lambda x, wv: x.cast("double") * wv),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bucket = bucket * 2 + F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
-        return bucket
-
-    def weight(p, d):
-        h = F.xxhash64(F.lit(table), p, d)
-        return (h % 10_000_019).cast("double") / F.lit(10_000_019.0)
-
-    dims = F.sequence(F.lit(1), F.size(vec))
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(num_planes - 1)),
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(vec, dims, lambda x, d: x.cast("double") * weight(p, d)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b)
+def _hyperplane_bucket(vec, num_planes: int, weights):
+    """Sign-pattern bucket id for a vector under ``num_planes``
+    pseudo-random hyperplanes, one LSH table: ``weights`` is that
+    table's :func:`portable_plane_weights` matrix bound as an
+    array<array<double>> column. The per-table reference form of the
+    single nested expression :func:`cosine_topk_lsh` builds (and pins it
+    bit-for-bit in tests)."""
+    bucket = F.lit(0).cast("long")
+    for p in range(num_planes):
+        w = F.element_at(weights, p + 1)
+        dot = F.aggregate(
+            F.zip_with(vec, w, lambda x, wv: x.cast("double") * wv),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bucket = bucket * 2 + F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
+    return bucket
 
 
 def cosine_topk_lsh(
@@ -291,22 +237,22 @@ def cosine_topk_lsh(
     query_id_col: str = "query_id",
     num_planes: int = 4,
     num_tables: int = 8,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane LSH bucketing.
 
-    ``portable=True`` switches the hyperplane weights to the md5-derived
-    family (:func:`_hyperplane_bucket`): same bucket-join structure and
-    S-curve, but the bucket assignment — and therefore the whole top-k
-    output — is reproducible in DuckDB, so the query can be value-hash
-    oracled instead of only recall-gated.
+    The hyperplane weights are md5-derived (:func:`portable_plane_weights`),
+    so the bucket assignment — and therefore the whole top-k output — is
+    reproducible in DuckDB, and the query is value-hash oracled instead
+    of only recall-gated.
 
     Each side gets ``num_tables`` bucket ids; candidates = bucket collisions
     in any table (union via explode + equi-join + dedup). Exact cosine is
     then computed only on candidates and ranked per query. With small
     buckets the join is a plain shuffled equi-join — no broadcast needed, so
     this path scales to corpora that cannot be broadcast *and* query sets
-    that cannot either.
+    that cannot either. The weight matrix is sized from any non-NULL
+    vector, so NULL vectors anywhere in the corpus are accepted, and an
+    empty corpus returns no rows.
 
     Tuning: per-plane agreement for angle θ is (1 - θ/π); a candidate
     survives a table with probability (1-θ/π)^num_planes and any of
@@ -316,9 +262,11 @@ def cosine_topk_lsh(
     ~1.7% per table and recall collapses. The ``ann_lsh_recall`` entry
     query pins a measured floor against brute force.
     """
-    # the portable weight matrix is precomputed driver-side per dim, so
-    # probe the (uniform) vector length once — a 1-row driver job, same
-    # budget class as the index builders' dimension-sized collects.
+    # The weight matrix (plane p, dim d weight = first 60 md5 bits of
+    # "table|p|d" mapped to [-1, 1), the recipe the DuckDB twin replays)
+    # is precomputed driver-side per dim, so probe the (uniform) vector
+    # length once from a non-NULL row — a 1-row driver job, same budget
+    # class as the index builders' dimension-sized collects.
     # The matrix is then shipped as ONE broadcast 1-row frame
     # (array<array<array<double>>>, [table][plane][dim]) rather than
     # num_tables*num_planes*dim literal nodes: the literal-tree form
@@ -326,86 +274,62 @@ def cosine_topk_lsh(
     # that the single-column binding removes; at 100 TB both are
     # data-size-independent but the broadcast form also keeps the
     # analyzed plan small enough to re-optimize cheaply under AQE.
-    wdf = None
-    if portable:
-        first = corpus.select(F.size(F.col(vec_col))).first()
-        if first is None or first[0] is None:
-            raise ValueError(
-                "cosine_topk_lsh(portable=True) needs a non-empty corpus "
-                f"with non-null '{vec_col}' to size the hyperplane weight "
-                "matrix"
-            )
-        dim = first[0]
-        wmat = [
-            portable_plane_weights(t, num_planes, dim)
-            for t in range(num_tables)
-        ]
-        wdf = corpus.sparkSession.createDataFrame(
-            [(wmat,)], "__hw array<array<array<double>>>"
-        )
+    first = (
+        corpus.select(F.size(F.col(vec_col)).alias("dim"))
+        .filter(F.col("dim").isNotNull())
+        .first()
+    )
+    # no sized row (empty corpus, or every vector NULL): a 0-dim matrix
+    # still plans, and an empty corpus then yields no rows
+    dim = first["dim"] if first is not None else 0
+    wmat = [portable_plane_weights(t, num_planes, dim) for t in range(num_tables)]
+    wdf = corpus.sparkSession.createDataFrame(
+        [(wmat,)], "__hw array<array<array<double>>>"
+    )
 
     def with_buckets(df, ident):
-        if portable:
-            # __hw is a reserved internal name (like __q_vec below):
-            # drop any caller column of that name before binding the
-            # broadcast weight frame so F.col("__hw") stays unambiguous.
-            df = df.drop("__hw").crossJoin(F.broadcast(wdf))
-            # ONE nested higher-order expression computes EVERY table's
-            # bucket from the broadcast weight tensor: fold over the
-            # planes of each table (bucket = bucket*2 + sign bit), dot
-            # product as the same left-to-right zip_with/aggregate fold
-            # as before — bit-identical values, but the expression tree
-            # (and the Column-construction py4j traffic) shrinks
-            # ~num_tables*num_planes-fold. Measured at sf0.1: DataFrame
-            # CONSTRUCTION of the full top-k plan was 2.7-4.9 s with the
-            # per-table unrolled form — more than the query's execution
-            # — and drops to well under a second with the single
-            # expression (the r10 literal-tree lesson, one level up).
-            # posexplode's 0-based pos IS the table id (array order).
-            buckets = F.transform(
-                F.col("__hw"),
-                lambda tw: F.aggregate(
-                    tw,
-                    F.lit(0).cast("long"),
-                    lambda acc, w: acc * 2
-                    + F.when(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col(vec_col),
-                                w,
-                                lambda x, wv: x.cast("double") * wv,
-                            ),
-                            F.lit(0.0),
-                            lambda a, x: a + x,
-                        )
-                        > 0,
-                        F.lit(1),
-                    ).otherwise(F.lit(0)),
-                ),
-            )
-            return df.select(
-                F.col(ident),
-                F.col(vec_col),
-                F.posexplode(buckets).alias("table_id", "bucket"),
-            )
-        tables = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table_id"),
-                    _hyperplane_bucket(
-                        F.col(vec_col),
-                        num_planes,
-                        t,
-                        portable,
-                        weights=None,
-                    ).alias("bucket"),
-                )
-                for t in range(num_tables)
-            ]
+        # __hw is a reserved internal name (like __q_vec below):
+        # drop any caller column of that name before binding the
+        # broadcast weight frame so F.col("__hw") stays unambiguous.
+        df = df.drop("__hw").crossJoin(F.broadcast(wdf))
+        # ONE nested higher-order expression computes EVERY table's
+        # bucket from the broadcast weight tensor: fold over the
+        # planes of each table (bucket = bucket*2 + sign bit), dot
+        # product as the same left-to-right zip_with/aggregate fold
+        # as _hyperplane_bucket — bit-identical values, but the
+        # expression tree (and the Column-construction py4j traffic)
+        # shrinks ~num_tables*num_planes-fold. Measured at sf0.1:
+        # DataFrame CONSTRUCTION of the full top-k plan was 2.7-4.9 s
+        # with the per-table unrolled form — more than the query's
+        # execution — and drops to well under a second with the single
+        # expression (the r10 literal-tree lesson, one level up).
+        # posexplode's 0-based pos IS the table id (array order).
+        buckets = F.transform(
+            F.col("__hw"),
+            lambda tw: F.aggregate(
+                tw,
+                F.lit(0).cast("long"),
+                lambda acc, w: acc * 2
+                + F.when(
+                    F.aggregate(
+                        F.zip_with(
+                            F.col(vec_col),
+                            w,
+                            lambda x, wv: x.cast("double") * wv,
+                        ),
+                        F.lit(0.0),
+                        lambda a, x: a + x,
+                    )
+                    > 0,
+                    F.lit(1),
+                ).otherwise(F.lit(0)),
+            ),
         )
         return df.select(
-            F.col(ident), F.col(vec_col), F.explode(tables).alias("tb")
-        ).select(ident, vec_col, "tb.table_id", "tb.bucket")
+            F.col(ident),
+            F.col(vec_col),
+            F.posexplode(buckets).alias("table_id", "bucket"),
+        )
 
     c = with_buckets(corpus, id_col).alias("c")
     q = with_buckets(queries.select(F.col(query_id_col), F.col(vec_col)), query_id_col)

@@ -188,8 +188,8 @@ SELECT query_id, neighbor_id, cosine_sim, sim_rank, ce_score,
 FROM sc ORDER BY query_id, rerank_pos
 """
 
-# Portable-LSH top-k twin (similarity.cosine_topk_lsh portable=True,
-# 3 planes x 8 tables, k=5 — query key ann_cosine_lsh): replicates the
+# LSH top-k twin (similarity.cosine_topk_lsh, 3 planes x 8 tables,
+# k=5 — query key ann_cosine_lsh): replicates the
 # md5-derived hyperplane weights (first 60 md5 bits of "table|plane|dim"
 # mapped to [-1, 1)), the sign-pattern bucket fold (acc*2 + bit — DuckDB's
 # init-less list_reduce equals Spark's 0-seeded aggregate for this op),
@@ -496,8 +496,7 @@ ORDER BY doc_id
 
 
 # Routed-funnel twin (plans/corpus.py corpus_prep with
-# near_dup_pair_budget=1M, near_dup_portable=True — query key
-# corpus_prep_auto): replicates the ROUTING DECISION (exact blocked
+# near_dup_pair_budget=1M — query key corpus_prep_auto): replicates the ROUTING DECISION (exact blocked
 # candidate-pair count over the exact-dedup survivors, jaccard_block_stats
 # semantics) and BOTH branches — the blocked-Jaccard pair removal when
 # sparse, and the banded MinHash bucket-canonical dedup

@@ -98,7 +98,6 @@ def corpus_prep(
     keep_cols: tuple[str, ...] = ("lang", "source"),
     max_dup_2gram_frac: float | None = None,
     near_dup_pair_budget: int | None = None,
-    near_dup_portable: bool = False,
     normalize: bool = False,
     sketch: DataFrame | None = None,
     sigs: DataFrame | None = None,
@@ -115,12 +114,12 @@ def corpus_prep(
     ``near_dup_pair_budget`` arms the dense-corpus self-defense: before
     the near-dup verify join, :func:`near_dup_route` counts the exact
     candidate pairs the blocked-Jaccard path would verify; past the
-    budget the stage runs banded MinHash-LSH instead (estimated-Jaccard
-    threshold, xxhash fast path). The default ``None`` keeps the exact
-    path unconditionally — that form is bit-stable and oracle-checked
-    (query key ``corpus_prep``); the routed form is recall-gated against
-    it in tests (the ``ann_lsh_recall`` pattern) and registered as
-    ``corpus_prep_auto``.
+    budget the stage runs banded MinHash-LSH instead (the md5 MinHash
+    family, so the routed output has a DuckDB twin too). The default
+    ``None`` keeps the exact path unconditionally (query key
+    ``corpus_prep``); the routed form is value-hash oracled on both
+    branches as ``corpus_prep_auto`` and recall-gated against the exact
+    form in tests (the ``ann_lsh_recall`` pattern).
 
     ``normalize=True`` prepends :func:`text.normalize_text` as stage 0
     (zero-width/control strip, CRLF->LF, whitespace collapse, NFC):
@@ -134,17 +133,9 @@ def corpus_prep(
     the funnel semi-join-restricts them to the exact-dedup survivor set)
     so the near-dup stage skips re-tokenizing text the pipeline has
     already sketched. ``sigs`` must match the funnel's dense-route
-    parameters (num_hashes=32, shingle_size=1,
-    portable=``near_dup_portable``). Incompatible with
+    parameters (num_hashes=32, shingle_size=1). Incompatible with
     ``normalize=True`` — normalization changes the text the sketch
     would have to reflect.
-
-    ``near_dup_portable=True`` makes the routed path use the
-    md5-derived portable hash family instead of xxhash64 — slower per
-    shingle, but the routed output then has a DuckDB twin, so
-    ``corpus_prep_auto`` is value-hash oracled on BOTH routing branches
-    (the r9 verdict's rows-only retirement). Default False keeps the
-    JVM fast path for callers that don't need engine portability.
 
     ``substring_min_len`` arms the final intake stage: cross-document
     SUBSTRING-level dedup (dedup_fuzzy.remove_duplicate_spans) over the
@@ -239,7 +230,6 @@ def corpus_prep(
             "text",
             threshold=jaccard_threshold,
             shingle_size=1,
-            portable=near_dup_portable,
             sigs=sub_sigs,
         ).persist()
     else:

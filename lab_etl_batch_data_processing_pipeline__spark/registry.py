@@ -278,12 +278,12 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dups in portable mode: md5-derived base hashes +
-    an inlined universal-hash family, so DuckDB reproduces the exact
-    signatures, band buckets, and estimated-Jaccard values."""
+    """MinHash-LSH near-dups: md5-derived base hashes + an inlined
+    universal-hash family, so DuckDB reproduces the exact signatures,
+    band buckets, and estimated-Jaccard values."""
     return dedup_fuzzy.minhash_near_dups(
-        _t(spark, sf_dir, "documents"), threshold=0.4, portable=True,
-        sigs=_doc_sigs(spark, sf_dir, num_hashes=32, shingle_size=3, portable=True),
+        _t(spark, sf_dir, "documents"), threshold=0.4,
+        sigs=_doc_sigs(spark, sf_dir, num_hashes=32, shingle_size=3),
     )
 
 
@@ -344,8 +344,8 @@ def q_containment_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable 60-bit SimHash sketches (md5-derived token bits —
-    bit-for-bit reproducible in DuckDB)."""
+    """60-bit SimHash sketches (md5-derived token bits — bit-for-bit
+    reproducible in DuckDB)."""
     return dedup_fuzzy.simhash(_t(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
@@ -379,14 +379,13 @@ def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate LSH-bucketed cosine top-k. 3 planes / 8 tables
     matches the wide-angle neighbor geometry of the testdata embeddings
-    (top-5 cosine ~0.3): measured recall@5 is 0.6-1.0 across SFs.
-    portable=True (md5-derived hyperplane weights) since r10, so the
-    bucket assignment — and therefore the whole top-k output — has a
-    DuckDB value-hash twin (r9 verdict task 4: the oldest rows-only key
-    retired); ann_lsh_recall still pins approximation quality."""
+    (top-5 cosine ~0.3): measured recall@5 is 0.6-1.0 across SFs. The
+    hyperplane weights are md5-derived, so the bucket assignment — and
+    therefore the whole top-k output — has a DuckDB value-hash twin;
+    ann_lsh_recall still pins approximation quality."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_topk_lsh(
-        emb, _query_vectors(emb), k=5, num_planes=3, num_tables=8, portable=True
+        emb, _query_vectors(emb), k=5, num_planes=3, num_tables=8
     )
 
 
@@ -422,7 +421,7 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     exact = _ground_truth_topk(spark, sf_dir, k=5)
     approx = similarity.cosine_topk_lsh(
-        emb, _query_vectors(emb), k=5, num_planes=3, num_tables=8, portable=True
+        emb, _query_vectors(emb), k=5, num_planes=3, num_tables=8
     ).select("query_id", "neighbor_id")
     return _ann_recall(exact, approx, floor=0.4)
 
@@ -2415,12 +2414,12 @@ def q_corpus_prep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH instead of the quadratic verify join (plans/corpus.py
     near_dup_route). The 1M budget routes the dense sf0.1 fixture
     (~4.8M candidate pairs) to MinHash while staying exact on sparse
-    corpora. Value-hash oracled on BOTH branches since r10
-    (near_dup_portable=True puts the routed path on the md5 portable
-    hash family, and the DuckDB twin replicates the routing count, the
-    exact pair join AND the banded bucket-canonical dedup, picking the
-    branch with the same 1M budget); the recall gate vs the exact
-    funnel in tests/test_text_dedup.py still pins routed-path quality."""
+    corpora. Value-hash oracled on BOTH branches (the routed path runs
+    the md5 MinHash family, and the DuckDB twin replicates the routing
+    count, the exact pair join AND the banded bucket-canonical dedup,
+    picking the branch with the same 1M budget); the recall gate vs the
+    exact funnel in tests/test_text_dedup.py still pins routed-path
+    quality."""
     from lab_etl_batch_data_processing_pipeline__spark.plans.corpus import corpus_prep
 
     return corpus_prep(
@@ -2428,9 +2427,8 @@ def q_corpus_prep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_quality=0.7,
         jaccard_threshold=0.5,
         near_dup_pair_budget=1_000_000,
-        near_dup_portable=True,
         sketch=_doc_sketch(spark, sf_dir),
-        sigs=_doc_sigs(spark, sf_dir, num_hashes=32, shingle_size=1, portable=True),
+        sigs=_doc_sigs(spark, sf_dir, num_hashes=32, shingle_size=1),
     )
 
 
@@ -3590,8 +3588,8 @@ def q_event_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order is load-bearing: the driver's correctness gate
     checks the FIRST 50 keys (observed every round since r1), so keys
-    needing a fresh driver oracle row sit inside that window; keys past
-    50 still run in bench.py and each carries standing pytest coverage
+    needing a fresh driver oracle row sit inside that window; each key
+    past 50 carries standing pytest coverage
     (tests/test_entry_contract.py::TAIL_KEYS is the enforced source of
     truth for the split, and test_spot_oracle_parity runs Spark-vs-DuckDB
     parity for every oracle-bearing tail key).

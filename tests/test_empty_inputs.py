@@ -61,6 +61,11 @@ def test_similarity_empty_behavior(spark, empty, tmp_path):
     emb = empty["emb"]
     queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
     assert similarity.cosine_topk_bruteforce(emb, queries).count() == 0
+    # LSH sizes its weight matrix from the corpus: with no vector to size
+    # it from, the search has no neighbours rather than no plan
+    assert similarity.cosine_topk_lsh(emb, queries).count() == 0
+    one = spark.createDataFrame([(0, [1.0, 0.5])], "query_id long, embedding array<float>")
+    assert similarity.cosine_topk_lsh(emb, one).count() == 0
     assert similarity.quantize_embeddings(emb).count() == 0
     # codebook training over nothing is meaningless -> loud refusal,
     # never a NoneType crash

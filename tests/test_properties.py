@@ -2404,6 +2404,25 @@ def test_zorder_value_matches_python_interleave(spark, pairs, bits):
 _WORDS = ["alpha", "beta", "gamma", "delta", "x", "Y"]
 
 
+def _simhash_replica(text: str) -> int:
+    """The sequential SimHash definition: per distinct lowercase token,
+    60 bits from the md5 prefix; sketch bit b set iff a strict majority
+    of tokens carry it; an empty doc sketches to 0."""
+    import hashlib
+
+    toks = list(dict.fromkeys(w for w in text.lower().split() if w))
+    counts = [0] * 60
+    for t in toks:
+        h = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+        for b in range(60):
+            counts[b] += (h >> (59 - b)) & 1
+    sk = 0
+    for b in range(60):
+        if 2 * counts[b] > len(toks):
+            sk |= 1 << (59 - b)
+    return sk
+
+
 @given(
     docs=st.lists(
         st.lists(st.sampled_from(_WORDS), max_size=8),
@@ -2413,38 +2432,29 @@ _WORDS = ["alpha", "beta", "gamma", "delta", "x", "Y"]
 )
 @settings(**SETTINGS)
 def test_simhash_portable_matches_md5_replica(spark, docs):
-    """The portable 60-bit SimHash (packed-counter aggregate form) must
-    equal the sequential definition: per distinct lowercase token, 60
-    bits from the md5 prefix; sketch bit b set iff a strict majority of
-    tokens carry it; empty docs sketch to 0."""
-    import hashlib
-
+    """The 60-bit SimHash (packed-counter aggregate form) must equal the
+    sequential definition (:func:`_simhash_replica`)."""
     from lab_etl_batch_data_processing_pipeline__spark.operators import dedup_fuzzy
 
-    expected = {}
-    rows = []
-    for i, words in enumerate(docs):
-        text = " ".join(words)
-        rows.append((i, text))
-        toks = list(dict.fromkeys(w for w in text.lower().split() if w))
-        if not toks:
-            expected[i] = 0
-            continue
-        counts = [0] * 60
-        for t in toks:
-            h = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
-            for b in range(60):
-                counts[b] += (h >> (59 - b)) & 1
-        sk = 0
-        for b in range(60):
-            if 2 * counts[b] > len(toks):
-                sk |= 1 << (59 - b)
-        expected[i] = sk
-
+    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
+    expected = {i: _simhash_replica(text) for i, text in rows}
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dedup_fuzzy.simhash(df, portable=True)
-    got = {r.doc_id: r.simhash for r in out.collect()}
+    got = {r.doc_id: r.simhash for r in dedup_fuzzy.simhash(df).collect()}
     assert got == expected
+
+
+def test_simhash_counters_do_not_overflow_on_large_documents(spark):
+    """A document with more distinct tokens than a 15-bit counter holds
+    (70,000; about half of them set each bit) must still sketch to the
+    sequential definition — the packed per-bit counters may not carry
+    into their neighbours."""
+    from lab_etl_batch_data_processing_pipeline__spark.operators import dedup_fuzzy
+
+    text = " ".join(f"w{i}" for i in range(70_000))
+    expected = _simhash_replica(text)
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    assert expected != 0
+    assert dedup_fuzzy.simhash(df).first().simhash == expected
 
 
 @given(

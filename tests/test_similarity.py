@@ -77,6 +77,35 @@ def test_lsh_is_subset_of_bruteforce_scores(vectors):
         assert r.cosine_sim == pytest.approx(exact[r.neighbor_id], abs=1e-6)
 
 
+def test_lsh_accepts_null_first_vector(spark):
+    """The weight matrix is sized from a non-NULL vector, not from the
+    corpus's first row: a NULL embedding in row one must neither fail
+    the search nor change the neighbours of the rest of the corpus."""
+    import random
+
+    rnd = random.Random(11)
+    rows = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(4)]) for i in range(40)]
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(rows, schema)
+    with_null = spark.createDataFrame([(100, None)] + rows, schema)
+    assert with_null.first().embedding is None
+    queries = corpus.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def topk(df):
+        return [
+            tuple(r)
+            for r in similarity.cosine_topk_lsh(
+                df, queries, k=3, num_planes=2, num_tables=4
+            ).collect()
+        ]
+
+    expected = topk(corpus)
+    assert expected
+    assert topk(with_null) == expected
+
+
 @pytest.fixture(scope="module")
 def clustered_vectors(spark):
     # three tight, well-separated clusters; IVF must not lose neighbors
@@ -810,7 +839,7 @@ def test_lsh_collapsed_bucket_expression_matches_per_table_form(spark):
     old = []
     for t in range(n_tables):
         col = similarity._hyperplane_bucket(
-            F.col("embedding"), n_planes, t, True,
+            F.col("embedding"), n_planes,
             weights=F.element_at(F.col("__hw"), t + 1),
         )
         old.extend(

@@ -309,18 +309,14 @@ def test_corpus_prep_dense_routing_matches_exact_above_budget(spark):
     assert [r.doc_id for r in exact.collect()] == [r.doc_id for r in routed.collect()]
 
 
-@pytest.mark.parametrize("portable", [False, True])
-def test_corpus_prep_dense_routing_recall(spark, portable):
+def test_corpus_prep_dense_routing_recall(spark):
     """Recall gate for the routed funnel (the ann_lsh_recall pattern):
     when the budget trips and the near-dup stage runs banded MinHash,
     the docs it removes must cover a floor fraction of the docs the
     exact blocked-Jaccard funnel removes. Pins both that the routing
     actually fires on the dense fixture (a broken route would produce
     near-identical outputs AND trip the n_removed_routed check) and
-    that the approximate path's quality doesn't silently collapse.
-    Both hash families gated: xxhash (default fast path) and the md5
-    portable family corpus_prep_auto runs since r10 (its DuckDB twin
-    needs engine-portable hashes)."""
+    that the approximate path's quality doesn't silently collapse."""
     from lab_etl_batch_data_processing_pipeline__spark.plans.corpus import corpus_prep
 
     docs = text_table(spark)
@@ -330,7 +326,7 @@ def test_corpus_prep_dense_routing_recall(spark, portable):
     routed_kept = survivors(
         corpus_prep(
             docs, min_quality=0.0, jaccard_threshold=0.3,
-            near_dup_pair_budget=1_000, near_dup_portable=portable,
+            near_dup_pair_budget=1_000,
         )
     )
     exact_drops = all_ids - exact_kept
@@ -367,34 +363,28 @@ def test_precomputed_sketch_matches_inline(spark):
 def test_precomputed_sigs_match_inline(spark):
     """Same contract for the MinHash side: minhash_near_dups /
     minhash_bucket_dedup fed precomputed signatures (same
-    num_hashes/shingle_size/portable) must match the inline form."""
+    num_hashes/shingle_size) must match the inline form."""
     docs = text_table(spark)
-    for portable, shingle in ((True, 3), (False, 1)):
+    for shingle in (3, 1):
         sigs = dedup_fuzzy.minhash_signatures(
-            docs, num_hashes=32, shingle_size=shingle, portable=portable
+            docs, num_hashes=32, shingle_size=shingle
         )
 
         def rows(df):
             return sorted(tuple(r) for r in df.collect())
 
         assert rows(
-            dedup_fuzzy.minhash_near_dups(
-                docs, threshold=0.3, shingle_size=shingle, portable=portable
-            )
+            dedup_fuzzy.minhash_near_dups(docs, threshold=0.3, shingle_size=shingle)
         ) == rows(
             dedup_fuzzy.minhash_near_dups(
-                docs, threshold=0.3, shingle_size=shingle, portable=portable,
-                sigs=sigs,
+                docs, threshold=0.3, shingle_size=shingle, sigs=sigs
             )
         )
         assert rows(
-            dedup_fuzzy.minhash_bucket_dedup(
-                docs, threshold=0.5, shingle_size=shingle, portable=portable
-            )
+            dedup_fuzzy.minhash_bucket_dedup(docs, threshold=0.5, shingle_size=shingle)
         ) == rows(
             dedup_fuzzy.minhash_bucket_dedup(
-                docs, threshold=0.5, shingle_size=shingle, portable=portable,
-                sigs=sigs,
+                docs, threshold=0.5, shingle_size=shingle, sigs=sigs
             )
         )
 
@@ -409,9 +399,7 @@ def test_corpus_prep_with_sketch_matches_plain(spark):
 
     docs = text_table(spark)
     sketch = dedup_fuzzy.token_sketch(docs)
-    sigs = dedup_fuzzy.minhash_signatures(
-        docs, num_hashes=32, shingle_size=1, portable=False
-    )
+    sigs = dedup_fuzzy.minhash_signatures(docs, num_hashes=32, shingle_size=1)
     plain = [tuple(r) for r in corpus_prep(docs, min_quality=0.0).collect()]
     with_sketch = [
         tuple(r) for r in corpus_prep(docs, min_quality=0.0, sketch=sketch).collect()
@@ -497,8 +485,15 @@ def test_artifact_param_mismatch_raises(spark, docs, tmp_path):
         dedup_fuzzy.minhash_near_dups(docs, num_hashes=16, bands=8, sigs=sigs)
     with pytest.raises(ValueError, match="shingle_size"):
         dedup_fuzzy.minhash_near_dups(docs, shingle_size=2, sigs=sigs)
+    # a signature frame stamped with another hash family (the retired
+    # xxhash64 one) is refused, not banded as if it were md5
+    stamp = dict(sigs.schema["signature"].metadata[dedup_fuzzy.ARTIFACT_META_KEY])
+    stamp["portable"] = False
+    foreign = sigs.withMetadata(
+        "signature", {dedup_fuzzy.ARTIFACT_META_KEY: stamp}
+    )
     with pytest.raises(ValueError, match="portable"):
-        dedup_fuzzy.minhash_bucket_dedup(docs, portable=False, sigs=sigs)
+        dedup_fuzzy.minhash_bucket_dedup(docs, sigs=foreign)
 
 
 def test_incremental_dedup_same_id_cross_side(spark):
