@@ -250,9 +250,9 @@ def cosine_topk_lsh(
     then computed only on candidates and ranked per query. With small
     buckets the join is a plain shuffled equi-join — no broadcast needed, so
     this path scales to corpora that cannot be broadcast *and* query sets
-    that cannot either. The weight matrix is sized from any non-NULL
-    vector, so NULL vectors anywhere in the corpus are accepted, and an
-    empty corpus returns no rows.
+    that cannot either. Rows with a NULL vector, on either side, are
+    dropped before bucketing (they have no direction, so no neighbours);
+    an empty or all-NULL corpus returns no rows.
 
     Tuning: per-plane agreement for angle θ is (1 - θ/π); a candidate
     survives a table with probability (1-θ/π)^num_planes and any of
@@ -265,8 +265,8 @@ def cosine_topk_lsh(
     # The weight matrix (plane p, dim d weight = first 60 md5 bits of
     # "table|p|d" mapped to [-1, 1), the recipe the DuckDB twin replays)
     # is precomputed driver-side per dim, so probe the (uniform) vector
-    # length once from a non-NULL row — a 1-row driver job, same budget
-    # class as the index builders' dimension-sized collects.
+    # length once — a 1-row driver job, same budget class as the index
+    # builders' dimension-sized collects.
     # The matrix is then shipped as ONE broadcast 1-row frame
     # (array<array<array<double>>>, [table][plane][dim]) rather than
     # num_tables*num_planes*dim literal nodes: the literal-tree form
@@ -274,13 +274,13 @@ def cosine_topk_lsh(
     # that the single-column binding removes; at 100 TB both are
     # data-size-independent but the broadcast form also keeps the
     # analyzed plan small enough to re-optimize cheaply under AQE.
-    first = (
-        corpus.select(F.size(F.col(vec_col)).alias("dim"))
-        .filter(F.col("dim").isNotNull())
-        .first()
-    )
-    # no sized row (empty corpus, or every vector NULL): a 0-dim matrix
-    # still plans, and an empty corpus then yields no rows
+    # A NULL vector's dot products are NULL, which would fall through
+    # to sign bit 0 in every table and make it a candidate of bucket 0.
+    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    queries = queries.filter(F.col(vec_col).isNotNull())
+    first = corpus.select(F.size(F.col(vec_col)).alias("dim")).first()
+    # no row (empty or all-NULL corpus): a 0-dim matrix still plans,
+    # and the empty corpus then yields no rows
     dim = first["dim"] if first is not None else 0
     wmat = [portable_plane_weights(t, num_planes, dim) for t in range(num_tables)]
     wdf = corpus.sparkSession.createDataFrame(

@@ -489,8 +489,8 @@ def global_rank_two_phase(
     at every scale (width-proportional savings cannot repay a
     row-proportional join — measured: rfm_segments' three tiles cost
     +3 s at sf0.1 under the narrow plan for a 2-3 long payload, and
-    the strided x1000 cum receipt reads 150.2 s warm with join-back
-    vs 48.1 s key-only, tools/scale_probe_r18_rank*.json).
+    the strided x1000 cum probe reads 150.2 s warm with join-back
+    vs 48.1 s key-only).
 
     Preconditions (the rank-family contract): ``order_exprs`` must end
     in a unique tiebreak (ranks over a non-total order would be

@@ -217,6 +217,7 @@ WITH b AS (
            ), (acc, bit) -> acc * 2 + bit)
          ) AS buckets
   FROM embeddings
+  WHERE embedding IS NOT NULL
 ), cexp AS (
   SELECT vec_id, t, buckets[t + 1] AS bkt FROM b, range(0, 8) r(t)
 ), qexp AS (

@@ -1,10 +1,9 @@
 """Query registry: the driver contract's implementation module.
 
 ``__spark_entry__.py`` at the repo root is a thin shim re-exporting
-this module's ``entry`` / ``queries`` / ``oracle_sql`` (the r8 verdict
-asked for the entry file to stay a thin registry as operators land;
-the wrappers, helpers, and rotation bookkeeping live HERE in the
-package where the rest of the engine is).
+this module's ``entry`` / ``queries`` / ``oracle_sql``, so the entry
+file stays a thin, stable contract while the wrappers and helpers live
+here in the package with the rest of the engine.
 
 Driver contract for the spark-graft builder (PySpark target).
 
@@ -3586,111 +3585,15 @@ def q_event_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is load-bearing: the driver's correctness gate
-    checks the FIRST 50 keys (observed every round since r1), so keys
-    needing a fresh driver oracle row sit inside that window; each key
-    past 50 carries standing pytest coverage
-    (tests/test_entry_contract.py::TAIL_KEYS is the enforced source of
-    truth for the split, and test_spot_oracle_parity runs Spark-vs-DuckDB
-    parity for every oracle-bearing tail key).
+    """Every registry key mapped to its query builder ``fn(spark, sf_dir)``.
 
-    ROTATION RULES (standing):
-    - >= 2-green: a key leaves the window only after at least two
-      driver-green CORRECTNESS rows on its CURRENT implementation.
-    - rewrite-requeues (adopted r14, r13 verdict task 2): ANY rewrite
-      of an operator re-queues that operator's keys for the next
-      window, regardless of how many greens the pre-rewrite code had —
-      a driver-green row certifies the code that ran, not the key
-      name. Precedents that motivated the rule: the r9 LSH rewrite and
-      the r13 single-pass selection collapse (price_weighted_median,
-      events_mad_outliers, price_winsorized, customer_cohort_retention
-      were rewritten AFTER their r9-r12 green rows).
-
-    Current window (r18, rotation #4 of the staleness retirement —
-    executed exactly as pre-planned in the r17 tag of this docstring /
-    r17 verdict task 1). Rotated IN (15): transaction_reach (born
-    r17, never driver-sampled — the born-keys convention; its BFS
-    internals were also touched this round: one-pass symmetrize +
-    real unpersist sweep, so the r18 green certifies current code),
-    the nine remaining r07-green keys (events_json_struct,
-    revenue_rollup, repetition_stats, decontamination, pii_scrub,
-    corpus_mixture, event_type_skew, session_window_rollup,
-    scd2_user_state), then the five oldest r08 keys reference-surface
-    first (doc_normalize, char_lm_scores, ann_cosine_topk,
-    curated_join — J2-J4+P2+P5 — and popular_locations_weekly — M3).
-    Rotated OUT (15), per the >= 2-green rule: the fifteen
-    r16-rotated keys whose r17 green was their second consecutive
-    fresh row on unchanged code (copurchase_communities,
-    orders_by_weekday, nation_custkey_list, repeat_rate_monthly,
-    occupancy_monthly, bookings_per_user, avg_duration_monthly,
-    metric_sql_view, date_normalize, currency_convert, dedup_exact,
-    dedup_keys, csv_roundtrip, jdbc_roundtrip, sessionization).
-    HELD: the fifteen r17-rotated-in keys (their r17 green is the
-    first fresh row; the second lands in r18), the four rank-family
-    keys — RE-REQUEUED by the r18 rewrite of
-    windows.global_rank_two_phase (r17 verdict task 3: narrow
-    key_cols checkpoint + materialized tiny frames + deterministic
-    rank-bucket cum pass replacing the skewed pid-hash window; the
-    rewrite-requeue clock restarts, so customer_rfm,
-    orders_rank_stats, acctbal_ntile, part_revenue_pareto need r18+r19
-    greens and rotate out r20 at the earliest) — and the sixteen
-    r9/r10-wave coverage anchors (semantic_dedup, corpus_prep_auto,
-    embedding_kmeans et al. keep the embeddings/corpus/streaming/SCD
-    families driver-pinned).
-
-    r19 window plan (keep the rotation mechanical): ann_rerank (born
-    r18, never driver-sampled) LEADS per the born-keys convention;
-    rotate OUT the fifteen r17-rotated keys (their r18 green is the
-    second fresh row: transaction_hits, avg_price_weekly,
-    top_listings_topk, csv_single_file, doc_stats, doc_fingerprint,
-    language_id, simhash, label_centroids, running_totals,
-    salted_status_agg, user_engagement, corpus_splits,
-    asof_purchase_view, curated_partition_scan); HOLD
-    transaction_reach + the fourteen r18-rotated cohort (second green
-    due r19) and the four rank keys (second post-r18-rewrite green due
-    r19); rotate IN, after ann_rerank, the next
-    oldest r08-green keys, reference-surface first: csv_quarantine
-    (S2's quarantine leg), orders_expectations (P7), orders_profile,
-    pricing_summary, then mechanically oldest-first (cardinality_gate,
-    corpus_mixture_weighted, doc_chunks, embedding_near_dups,
-    events_resampled, events_variant, fuzzy_part_match,
-    heavy_hitters_gate, hll_union_gate, incremental_dedup,
-    jsonl_roundtrip) until the freed slots are spent; any key born in
-    r18 leads per the born-keys convention.
-
-    Current tail: rows with >= 1 driver-green round (most
-    multi-round; per-key receipts annotated in TAIL_KEYS), plus the
-    approximate-by-design rows whose quality is pinned by a
-    recall/invariant twin (top_listings_weekly <- top_listings_topk;
-    events_json <- events_json_struct). Every oracle-bearing tail key
-    runs real Spark-vs-DuckDB value parity in test_spot_oracle_parity
-    (the list is COMPUTED as TAIL_KEYS ∩ oracle_sql(); a hand-kept
-    list was caught drifting in r9). Since late r10 there are ZERO
-    rows-only keys: all 167 registry queries are value-hash
-    oracle-backed.
-
-    Rotation history lives in git (r5: IO-layer rows in; r6: r5-born
-    operators in; r7: r6-born in, stable IO/metric rows out; r8: r7/r8-
-    born in, ten stable rows out; r9: r9-born + the r8 tail debt in,
-    six stable rows out; late-r9 waves five through nine: see the r9
-    tag of this docstring; r10: the 13-key debt-closing rotation, held
-    through r11+r12 — see the r12 tag; r13: the ANN-family + tail-debt
-    rotation; r14: the rewrite-requeues rotation — see the r14 tag;
-    r15: the first staleness-retirement rotation — see the r15 tag;
-    r16: the second staleness-retirement rotation — see the r16 tag;
-    r17: rotation #3 plus the rank-family rewrite-requeues — see the
-    r17 tag; r18: rotation #4 plus the rank-family re-requeues,
-    described above).
+    The key order is part of the public contract: callers may read the
+    keys in this order, so keys are never reordered and new ones go at
+    the end. Every key has a DuckDB twin in :func:`oracle_sql`, and
+    ``tests/test_entry_contract.py::test_spot_oracle_parity`` checks each
+    one against it.
     """
     return {
-        # --- r18 driver window (first 50; see docstring) ---
-        # rotated IN r18 (rotation #4, exactly as pre-planned in the
-        # r17 tag): transaction_reach (born r17, never driver-sampled
-        # — the born-keys convention; BFS internals also touched r18,
-        # so this green certifies current code) leads, then the nine
-        # remaining r07-green keys and the five oldest r08 keys,
-        # reference-surface first (curated_join = J2-J4+P2+P5,
-        # popular_locations_weekly = M3):
         "transaction_reach": q_transaction_reach,
         "events_json_struct": q_events_json_struct,
         "revenue_rollup": q_revenue_rollup,
@@ -3706,8 +3609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_cosine_topk": q_ann_cosine_topk,
         "curated_join": q_curated_join,
         "popular_locations_weekly": q_popular_locations_weekly,
-        # HELD from the r17 rotation (r17 green is their first fresh
-        # driver row; the >= 2-green rule wants the second here):
         "transaction_hits": q_transaction_hits,
         "avg_price_weekly": q_avg_price_weekly,
         "top_listings_topk": q_top_listings_topk,
@@ -3723,18 +3624,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_splits": q_corpus_splits,
         "asof_purchase_view": q_asof_purchase_view,
         "curated_partition_scan": q_curated_partition_scan,
-        # rank family, RE-REQUEUED r18: windows.global_rank_two_phase
-        # was rewritten again (r17 verdict task 3 — narrow key_cols
-        # checkpoint, materialized tiny frames, deterministic
-        # rank-bucket cum pass), so the rewrite-requeue clock restarts
-        # (a driver-green row certifies the code that ran):
         "customer_rfm": q_customer_rfm,
         "orders_rank_stats": q_orders_rank_stats,
         "acctbal_ntile": q_acctbal_ntile,
         "part_revenue_pareto": q_part_revenue_pareto,
-        # r9/r10-wave keys held in-window (coverage anchors keeping
-        # the embeddings/corpus/streaming/SCD/graph families
-        # driver-pinned; see docstring):
         "semantic_dedup": q_semantic_dedup,
         "corpus_prep_auto": q_corpus_prep_auto,
         "embedding_kmeans": q_embedding_kmeans,
@@ -3751,10 +3644,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment_prune": q_containment_prune,
         "events_zorder": q_events_zorder,
         "part_entity_clusters": q_part_entity_clusters,
-        # --- past the driver's 50-key correctness window (see
-        # docstring). Rotated out r18 per the >= 2-green rule: the
-        # fifteen r16-rotated keys (r16+r17 driver greens on
-        # unchanged code):
         "copurchase_communities": q_copurchase_communities,
         "orders_by_weekday": q_orders_by_weekday,
         "nation_custkey_list": q_nation_custkey_list,
@@ -3770,10 +3659,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "csv_roundtrip": q_csv_roundtrip,
         "jdbc_roundtrip": q_jdbc_roundtrip,
         "sessionization": q_sessionization,
-        # Rotated out r17 per the >= 2-green rule: the
-        # fourteen r15-rotated keys (r15+r16 driver greens on
-        # unchanged code) and the three r15-touched keys whose r16
-        # green was the second post-touch row:
         "top_listings_weekly": q_top_listings_weekly,
         "events_json": q_events_json,
         "token_frequencies": q_token_frequencies,
@@ -3791,18 +3676,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": q_multimodal_features,
         "transaction_pagerank": q_transaction_pagerank,
         "copurchase_kcore": q_copurchase_kcore,
-        # Rotated out r16 per the >= 2-green rule:
-        # two post-rewrite greens (r14+r15) each:
         "events_mad_outliers": q_events_mad_outliers,
         "price_winsorized": q_price_winsorized,
         "customer_cohort_retention": q_customer_cohort_retention,
-        # six driver-green rounds each (r10-r15, unchanged since r10):
         "price_ks_drift": q_price_ks_drift,
         "supplier_incremental_ingest": q_supplier_incremental_ingest,
         "orders_reconcile": q_orders_reconcile,
         "user_activity_coverage": q_user_activity_coverage,
         "event_streaks": q_event_streaks,
-        # four driver-green rounds each (r9+r13+r14+r15, unchanged):
         "dup_span_report": q_dup_span_report,
         "containment_near_dups": q_containment_near_dups,
         "pmi_collocations": q_pmi_collocations,
@@ -3810,9 +3691,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_join_gate": q_bloom_join_gate,
         "customer_radius_join": q_customer_radius_join,
         "streaming_attribution": q_streaming_attribution,
-        # Rotated out r15 per the >= 2-green rule: the
-        # nine ANN-family keys (driver-green r13+r14 on unchanged
-        # code, plus the r14 sf0.1 segment receipt):
         "ann_cosine_lsh": q_ann_cosine_lsh,
         "ann_cosine_ivf": q_ann_cosine_ivf,
         "ann_cosine_pq": q_ann_cosine_pq,
@@ -3822,21 +3700,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq_recall": q_ann_pq_recall,
         "ann_ivfpq_recall": q_ann_ivfpq_recall,
         "ann_quantized_recall": q_ann_quantized_recall,
-        # and six r10-debt anchors with five driver-green rounds each
-        # (r10-r14, code unchanged since r10):
         "revenue_seasonal_backtest": q_revenue_seasonal_backtest,
         "events_level_shift": q_events_level_shift,
         "user_balance_floored": q_user_balance_floored,
         "price_equidepth": q_price_equidepth,
         "session_depth": q_session_depth,
         "events_ewma": q_events_ewma,
-        # Rotated out r14 with two driver-green rounds
-        # each (r9+r13, code unchanged since r9):
         "customer_stratified_sample": q_customer_stratified_sample,
         "quality_classifier": q_quality_classifier,
         "xml_roundtrip": q_xml_roundtrip,
-        # Rotated out r13 with four driver-green rounds each (r9-r12,
-        # unchanged since r9):
         "substring_dedup": q_substring_dedup,
         "purchase_attribution": q_purchase_attribution,
         "user_first_seen": q_user_first_seen,
@@ -3852,10 +3724,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "user_type_diversity": q_user_type_diversity,
         "copurchase_triples": q_copurchase_triples,
         "user_value_trend": q_user_value_trend,
-        # rotated out r10 after r1-r9 / r8+r9 green runs:
         "corpus_prep": q_corpus_prep,
         "recipe_training_mix": q_recipe_training_mix,
-        # earlier rotations (history in git and TAIL_KEYS):
         "heavy_hitters_gate": q_heavy_hitters_gate,
         "streaming_sessions": q_streaming_sessions,
         "orders_cdc_apply": q_orders_cdc_apply,
@@ -3894,13 +3764,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_offsets": q_pack_offsets,
         "winnowing": q_winnowing,
         "orders_profile": q_orders_profile,
-        # born r18 (new operator, never yet driver-sampled; queued to
-        # lead the r19 rotation per the born-keys convention):
         "ann_rerank": q_ann_rerank,
     }
 
+
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracles for every oracle-bearing queries() key — the
+    """DuckDB twin of every queries() key — the
     driver runs these against the same parquet tables and hash-compares
     with the Spark results. Bodies live in the package oracles module
     (lab_etl_batch_data_processing_pipeline__spark/oracles.py); this re-export keeps the driver

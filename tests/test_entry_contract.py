@@ -1,30 +1,20 @@
-"""Driver-contract invariants: entry/queries/oracle_sql shape and a fast
-oracle-diff spot check (full diff lives in tools/oracle_check.py)."""
+"""Driver-contract invariants: entry/queries/oracle_sql shape, and
+Spark-vs-DuckDB parity for every registry key at sf0.001 through the
+same comparison ``tools/oracle_check.py`` runs."""
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 import __spark_entry__ as entrymod
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF
+from tools import oracle_check
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
+    with oracle_check.duck_views(SF) as con:
+        yield con
 
 
 def test_entry_returns_rows(spark):
@@ -34,247 +24,12 @@ def test_entry_returns_rows(spark):
 
 
 def test_every_oracle_key_has_a_query():
-    assert set(entrymod.oracle_sql()) <= set(entrymod.queries())
+    assert set(entrymod.oracle_sql()) == set(entrymod.queries())
 
 
-# The driver's correctness gate checks exactly the first 50 registry keys
-# (observed r1-r4). Keys past the window get no driver row, so each must
-# carry standing pytest coverage instead — this pins both sides so the
-# split can't silently reshuffle when someone adds a key.
-ORACLE_WINDOW = 50
-TAIL_KEYS = {
-    # key -> where its correctness is pinned instead
-    # born r18 (new operator, never yet driver-sampled; queued to LEAD
-    # the r19 rotation per the born-keys convention):
-    "ann_rerank": "test_spot_oracle_parity + tests/test_similarity.py rerank golden/replica tests",
-    # rotated out r18 per the standing >= 2-green rule: the fifteen
-    # r16-rotated keys took their second consecutive fresh driver
-    # green in r17 (r16+r17, code unchanged):
-    "copurchase_communities": "test_spot_oracle_parity (driver-green r16+r17) + tests/test_graph.py CC goldens; transaction_reach in-window keeps the graph family driver-pinned",
-    "orders_by_weekday": "test_spot_oracle_parity (driver-green r16+r17)",
-    "nation_custkey_list": "test_spot_oracle_parity (driver-green r16+r17)",
-    "repeat_rate_monthly": "test_spot_oracle_parity (driver-green r16+r17; M7 also pinned DSL==SQL by tests/test_metrics_sql.py)",
-    "occupancy_monthly": "test_spot_oracle_parity (driver-green r16+r17; M2 DSL==SQL pinned)",
-    "bookings_per_user": "test_spot_oracle_parity (driver-green r16+r17; M5 DSL==SQL pinned)",
-    "avg_duration_monthly": "test_spot_oracle_parity (driver-green r16+r17; M6 DSL==SQL pinned)",
-    "metric_sql_view": "test_spot_oracle_parity (driver-green r16+r17; the SQL-entry twin of the M1-M7 family)",
-    "date_normalize": "test_spot_oracle_parity (driver-green r16+r17; P4)",
-    "currency_convert": "test_spot_oracle_parity (driver-green r16+r17; P3+J1+S3)",
-    "dedup_exact": "test_spot_oracle_parity (driver-green r16+r17; P1)",
-    "dedup_keys": "test_spot_oracle_parity (driver-green r16+r17; P1 key-subset)",
-    "csv_roundtrip": "test_spot_oracle_parity (driver-green r16+r17; S2/S6)",
-    "jdbc_roundtrip": "test_spot_oracle_parity (driver-green r16+r17; S1+S4 Derby round-trip)",
-    "sessionization": "test_spot_oracle_parity (driver-green r16+r17)",
-    # rotated out r17 per the standing >= 2-green rule: the fourteen
-    # r15-rotated keys took their second consecutive fresh driver
-    # green in r16 (r15+r16, code unchanged), and the three
-    # r15-touched keys took their second post-touch green:
-    "top_listings_weekly": "test_spot_oracle_parity (driver-green r15+r16; exact twin top_listings_topk in-window)",
-    "events_json": "test_spot_oracle_parity (driver-green r15+r16; strict-schema twin events_json_struct tail parity)",
-    "token_frequencies": "test_spot_oracle_parity (driver-green r15+r16)",
-    "word_bigrams": "test_spot_oracle_parity (driver-green r15+r16)",
-    "doc_tokens_regex": "test_spot_oracle_parity (driver-green r15+r16)",
-    "events_pivot": "test_spot_oracle_parity (driver-green r15+r16)",
-    "docs_per_source_quota": "test_spot_oracle_parity (driver-green r15+r16)",
-    "brand_setops": "test_spot_oracle_parity (driver-green r15+r16)",
-    "status_percentiles": "test_spot_oracle_parity (driver-green r15+r16)",
-    "zscore_events": "test_spot_oracle_parity (driver-green r15+r16)",
-    "customers_semi_anti": "test_spot_oracle_parity (driver-green r15+r16)",
-    "revenue_cube": "test_spot_oracle_parity (driver-green r15+r16)",
-    "orders_shipped_7d": "test_spot_oracle_parity (driver-green r15+r16)",
-    "nation_top_customer": "test_spot_oracle_parity (driver-green r15+r16)",
-    "multimodal_features": "test_spot_oracle_parity (two post-touch driver greens r15+r16) + tests/test_media_synth.py shape-matrix goldens",
-    "transaction_pagerank": "test_spot_oracle_parity (two post-touch driver greens r15+r16) + tests/test_graph.py goldens; transaction_hits in-window keeps the iterative graph family driver-pinned",
-    "copurchase_kcore": "test_spot_oracle_parity (two post-touch driver greens r15+r16) + tests/test_graph.py goldens",
-    # rotated out r16 per the standing >= 2-green rule (r15 verdict
-    # task 1's second staleness-retirement rotation made room for the
-    # r05-r07-era reference-surface keys):
-    "events_mad_outliers": "test_spot_oracle_parity (two post-rewrite driver greens r14+r15)",
-    "price_winsorized": "test_spot_oracle_parity (two post-rewrite driver greens r14+r15)",
-    "customer_cohort_retention": "test_spot_oracle_parity (two post-rewrite driver greens r14+r15)",
-    "price_ks_drift": "test_spot_oracle_parity (driver-green r10-r15, unchanged since r10)",
-    "supplier_incremental_ingest": "test_spot_oracle_parity (driver-green r10-r15; csv/jdbc_roundtrip in-window anchor IO)",
-    "orders_reconcile": "test_spot_oracle_parity (driver-green r10-r15)",
-    "user_activity_coverage": "test_spot_oracle_parity (driver-green r10-r15; sessionization in-window keeps sessions driver-pinned)",
-    "event_streaks": "test_spot_oracle_parity (driver-green r10-r15)",
-    "dup_span_report": "test_spot_oracle_parity (driver-green r9+r13-r15; containment_prune in-window keeps span machinery driver-pinned)",
-    "containment_near_dups": "test_spot_oracle_parity (driver-green r9+r13-r15)",
-    "pmi_collocations": "test_spot_oracle_parity (driver-green r9+r13-r15)",
-    "copurchase_pairs": "test_spot_oracle_parity (driver-green r9+r13-r15; copurchase_communities/kcore/clustering in-window keep the graph family driver-pinned)",
-    "bloom_join_gate": "test_spot_oracle_parity (driver-green r9+r13-r15)",
-    "customer_radius_join": "test_spot_oracle_parity (driver-green r9+r13-r15)",
-    "streaming_attribution": "test_spot_oracle_parity (driver-green r9+r13-r15; streaming_dedup in-window keeps streaming driver-pinned)",
-    # rotated out r15 per the standing >= 2-green rule: the nine
-    # ANN-family keys, driver-green r13+r14 on unchanged code (plus
-    # the r14 sf0.1 segment receipt 10/10):
-    "ann_cosine_lsh": "test_spot_oracle_parity (driver-green r13+r14; recall floor also pinned by tests/test_similarity.py)",
-    "ann_cosine_ivf": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_cosine_pq": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_cosine_ivfpq": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_lsh_recall": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_ivf_recall": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_pq_recall": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_ivfpq_recall": "test_spot_oracle_parity (driver-green r13+r14)",
-    "ann_quantized_recall": "test_spot_oracle_parity (driver-green r13+r14)",
-    # and six r10-debt anchors with FIVE driver-green rounds each
-    # (r10-r14, code unchanged since r10):
-    "revenue_seasonal_backtest": "test_spot_oracle_parity (driver-green r10-r14)",
-    "events_level_shift": "test_spot_oracle_parity (driver-green r10-r14)",
-    "user_balance_floored": "test_spot_oracle_parity (driver-green r10-r14)",
-    "price_equidepth": "test_spot_oracle_parity (driver-green r10-r14)",
-    "session_depth": "test_spot_oracle_parity (driver-green r10-r14; user_activity_coverage + event_streaks in-window keep sessions driver-pinned)",
-    "events_ewma": "test_spot_oracle_parity (driver-green r10-r14)",
-    # rotated out r14 per the standing >= 2-green rule, two
-    # driver-green rounds each (r9+r13, code unchanged since r9):
-    "customer_stratified_sample": "test_spot_oracle_parity (driver-green r9+r13)",
-    "quality_classifier": "test_spot_oracle_parity (driver-green r9+r13; corpus_prep_auto in-window keeps the quality gate driver-pinned)",
-    "xml_roundtrip": "test_spot_oracle_parity (driver-green r9+r13; supplier_incremental_ingest in-window anchors IO)",
-    # rotated out r13 per the standing >= 2-green rule, each with FOUR
-    # driver-green rounds (r9+r10+r11+r12, code unchanged since r9).
-    # NOTE (rewrite-requeues rule, r14): events_mad_outliers,
-    # price_winsorized, customer_cohort_retention were rewritten in r13
-    # AFTER those green rows and therefore re-queued into the r14
-    # window — they are no longer tail keys.
-    "substring_dedup": "test_spot_oracle_parity (driver-green r9-r12; dup_span_report in-window keeps the span machinery driver-pinned)",
-    "purchase_attribution": "test_spot_oracle_parity (driver-green r9-r12)",
-    "user_first_seen": "test_spot_oracle_parity (driver-green r9-r12)",
-    "events_fd_check": "test_spot_oracle_parity (driver-green r9-r12)",
-    "events_chi2": "test_spot_oracle_parity (driver-green r9-r12)",
-    "part_skyline": "test_spot_oracle_parity (driver-green r9-r12)",
-    "events_interpolated": "test_spot_oracle_parity (driver-green r9-r12)",
-    "conversion_funnel": "test_spot_oracle_parity (driver-green r9-r12; funnel_timing in-window)",
-    # NOTE (rewrite-requeues rule, r17): orders_rank_stats and
-    # customer_rfm were rewritten onto the two-phase distributed rank
-    # AFTER their r9-r12 greens and re-queued into the r17 window —
-    # no longer tail keys.
-    "user_value_twap": "test_spot_oracle_parity (driver-green r9-r12)",
-    "copurchase_triangles": "test_spot_oracle_parity (driver-green r9-r12; copurchase_pairs in-window keeps pair generation driver-pinned)",
-    "event_transitions": "test_spot_oracle_parity (driver-green r9-r12)",
-    "session_top_paths": "test_spot_oracle_parity (driver-green r9-r12)",
-    "user_type_diversity": "test_spot_oracle_parity (driver-green r9-r12)",
-    "copurchase_triples": "test_spot_oracle_parity (driver-green r9-r12; copurchase_pairs in-window)",
-    "user_value_trend": "test_spot_oracle_parity (driver-green r9-r12)",
-    # rotated out r10 per the standing >= 2-green rule:
-    "corpus_prep": "test_spot_oracle_parity (driver-green r1-r9; funnel also driver-pinned via corpus_prep_auto's shared exact branch)",
-    "recipe_training_mix": "test_spot_oracle_parity (driver-green r8+r9)",
-    # rotated out for the sixth wave; oracle-bearing, so
-    # test_spot_oracle_parity keeps running real value parity:
-    "heavy_hitters_gate": "test_spot_oracle_parity (driver-green r8)",
-    # NOTE (r15 staleness retirement): top_listings_weekly,
-    # events_json, token_frequencies, word_bigrams, brand_setops,
-    # events_pivot, docs_per_source_quota, doc_tokens_regex,
-    # status_percentiles, zscore_events, customers_semi_anti,
-    # nation_top_customer, acctbal_ntile, revenue_cube,
-    # orders_shipped_7d rotated back IN r15 (their last driver rows
-    # dated r03-r06) — no longer tail keys.
-    # NOTE (r16 staleness retirement): copurchase_communities (born
-    # r15), orders_by_weekday, nation_custkey_list, repeat_rate_monthly,
-    # occupancy_monthly, bookings_per_user, avg_duration_monthly,
-    # metric_sql_view, date_normalize, currency_convert, dedup_exact,
-    # dedup_keys, csv_roundtrip, jdbc_roundtrip, sessionization rotated
-    # back IN r16 (last driver rows r05-r07) — no longer tail keys.
-    # NOTE (r17 staleness retirement, rotation #3): transaction_hits
-    # (born r16), avg_price_weekly, top_listings_topk, csv_single_file,
-    # doc_stats, doc_fingerprint, language_id, simhash, label_centroids,
-    # running_totals, salted_status_agg, user_engagement, corpus_splits,
-    # asof_purchase_view, curated_partition_scan rotated back IN r17
-    # (last driver rows r06-r07) — no longer tail keys.
-    # NOTE (r18 staleness retirement, rotation #4): transaction_reach
-    # (born r17), events_json_struct, revenue_rollup, repetition_stats,
-    # decontamination, pii_scrub, corpus_mixture, event_type_skew,
-    # session_window_rollup, scd2_user_state (last driver rows r07),
-    # doc_normalize, char_lm_scores, ann_cosine_topk, curated_join,
-    # popular_locations_weekly (last driver rows r08) rotated back IN
-    # r18 — no longer tail keys.
-    # rotated out r9 after >= 2 driver-green rounds each (r7+r8):
-    "pricing_summary": "test_spot_oracle_parity",
-    "tfidf_top_terms": "test_spot_oracle_parity",
-    "quantile_gate": "test_spot_oracle_parity",
-    "events_variant": "test_spot_oracle_parity",
-    "doc_chunks": "test_spot_oracle_parity",
-    "rolling_revenue_7d": "test_spot_oracle_parity",
-    "parquet_upsert_roundtrip": "test_spot_oracle_parity",
-    "corpus_mixture_weighted": "test_spot_oracle_parity",
-    "cardinality_gate": "test_spot_oracle_parity",
-    "pack_offsets": "test_spot_oracle_parity",
-    "winnowing": "test_spot_oracle_parity",
-    "orders_profile": "test_spot_oracle_parity",
-    # rotated out late-r9 (r7+r8 driver-green, unchanged) as the
-    # fourth-wave rows (events_interpolated, conversion_funnel,
-    # orders_rank_stats, events_mad_outliers) took their slots:
-    "part_unpivot": "test_spot_oracle_parity",
-    "tables_manifest": "test_spot_oracle_parity",
-    "jsonl_roundtrip": "test_spot_oracle_parity",
-    "price_histogram": "test_spot_oracle_parity",
-    "orders_expectations": "test_spot_oracle_parity",
-    "pack_bins": "test_spot_oracle_parity",
-    "events_resampled": "test_spot_oracle_parity",
-    # rotated out late-r9 (multi-round driver-green, unchanged) as the
-    # fifth-wave rows (cohort retention, RFM, Markov transitions, top
-    # paths, Gini diversity, 3-itemsets) took their window slots:
-    "streaming_sessions": "tests/test_sources_multimodal_streaming.py replay tests + session_window_rollup tail parity",
-    "orders_cdc_apply": "test_spot_oracle_parity",
-    "fuzzy_part_match": "test_spot_oracle_parity",
-    "incremental_dedup": "test_spot_oracle_parity",
-    "tfidf_cosine_topk": "test_spot_oracle_parity",
-    "hll_union_gate": "test_spot_oracle_parity",
-    "csv_quarantine": "test_spot_oracle_parity",
-    "orders_snapshot_diff": "test_spot_oracle_parity",
-    "orc_roundtrip": "test_spot_oracle_parity",
-    "near_dup_jaccard": "test_spot_oracle_parity",
-    "minhash_near_dups": "test_spot_oracle_parity",
-    "near_dup_clusters": "test_spot_oracle_parity",
-    "streaming_user_totals": "tests/test_sources_multimodal_streaming.py replay tests",
-    "recipe_metric": "test_spot_oracle_parity",
-    "embedding_near_dups": "test_spot_oracle_parity",
-    "streaming_event_counts": "tests/test_sources_multimodal_streaming.py replay tests",
-    "training_batches": "test_spot_oracle_parity",
-    "training_mix": "shared oracle with recipe_training_mix (tail, driver-green r8+r9) + test_spot_oracle_parity",
-}
-
-
-def test_registry_window_split_is_pinned():
-    keys = list(entrymod.queries())
-    assert set(keys[ORACLE_WINDOW:]) == set(TAIL_KEYS), (
-        "registry tail changed: every key past the driver's 50-key "
-        "correctness window must be listed in TAIL_KEYS with pytest "
-        "coverage (see queries() docstring)"
+@pytest.mark.parametrize("name", list(entrymod.queries()))
+def test_spot_oracle_parity(registry_builds, duck, name):
+    _, problems = oracle_check.compare(
+        registry_builds.build(name), duck, entrymod.oracle_sql()[name]
     )
-    # every oracle-bearing key the driver should hash-check is in-window
-    in_window = set(keys[:ORACLE_WINDOW])
-    stranded = set(entrymod.oracle_sql()) - in_window - set(TAIL_KEYS)
-    assert not stranded, f"oracle keys outside window without coverage: {stranded}"
-
-
-def test_oracle_sql_parses_in_duckdb(duck):
-    for name, sql in entrymod.oracle_sql().items():
-        duck.execute(f"SELECT * FROM ({sql}) LIMIT 1")
-
-
-# Every oracle-bearing key past the driver's 50-key window gets its
-# driver hash-check replaced by this test. COMPUTED, not hand-listed:
-# the r9 sixth-wave rotation proved a hand-maintained list drifts (ten
-# keys claimed this coverage in TAIL_KEYS without appearing here), so
-# the source of truth is the registry itself — every tail key that
-# ships an oracle runs real Spark-vs-DuckDB value parity.
-SPOT_KEYS = sorted(set(TAIL_KEYS) & set(entrymod.oracle_sql()))
-
-
-@pytest.mark.parametrize("name", SPOT_KEYS)
-def test_spot_oracle_parity(spark, duck, name):
-    # None-safe total order (NULLable columns, e.g. date_normalize's
-    # malformed->NULL dates, break bare tuple comparison)
-    def key(t):
-        return tuple(str(x) for x in t)
-
-    sdf = entrymod.queries()[name](spark, SF)
-    spark_rows = sorted(
-        (tuple(row[c] for c in sorted(sdf.columns)) for row in sdf.collect()),
-        key=key,
-    )
-    tbl = duck.execute(entrymod.oracle_sql()[name]).fetch_arrow_table()
-    duck_rows = sorted(
-        (tuple(r[c] for c in sorted(tbl.column_names)) for r in tbl.to_pylist()),
-        key=key,
-    )
-    assert spark_rows == duck_rows
+    assert not problems, problems

@@ -9,16 +9,7 @@ import pytest
 import re
 
 import __spark_entry__ as entrymod
-
-SF = "/root/testdata/sf0.001"
-
-
-def formatted_plan(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+from conftest import SF, formatted_plan
 
 
 def test_status_filter_is_pushed_to_scan(spark):
@@ -727,12 +718,11 @@ def test_chi_square_single_data_sized_aggregate(spark):
 # ---------------------------------------------------------------------------
 # Plan-shape regression gate over the most expensive bench keys.
 #
-# tools/plan_audit.py dumps these plans to PLANS.md for human review; this
-# test is the automated form: the invariants SCALE.md claims for the hot
-# keys must hold in the STATIC plan on every run. The key list is pinned
-# (top-10 of BENCH_FULL_r11 by seconds, plus the ANN family whose
-# crossJoins carry a documented allowance) rather than read from
-# BENCH_FULL.json so the gate is deterministic under git.
+# The invariants SCALE.md claims for the hot keys must hold in the STATIC
+# plan on every run. The key list is pinned (the ten slowest keys of a
+# once-measured full registry run, plus the ANN family whose crossJoins
+# carry a documented allowance) rather than read from a timing file, so
+# the gate is deterministic under git.
 #
 # BNLJ allowance: a formatted plan prints each operator in the tree AND in
 # the operator-detail section, so one physical BroadcastNestedLoopJoin
@@ -740,8 +730,6 @@ def test_chi_square_single_data_sized_aggregate(spark):
 # (hyperplane weights, PQ codebooks, IVF centroid tables — see
 # operators/similarity.py) whose build side is constant-size at any SF.
 # ---------------------------------------------------------------------------
-
-_GATE_SF = SF  # sf0.001 — plan SHAPE is SF-independent for these keys
 
 # key -> max allowed BroadcastNestedLoopJoin mentions in the formatted plan
 # (2 mentions == 1 physical operator). Every other key must have zero.
@@ -765,24 +753,10 @@ _PLAN_GATE_KEYS = {
 }
 
 
-@pytest.fixture(scope="module")
-def gate_plans(spark):
-    """Build every gated plan once (some query builders run eager
-    dimension-probe jobs; prebuild first so artifact reads hit cache)."""
-    try:
-        entrymod.prebuild_indexes(spark, _GATE_SF)
-    except Exception:
-        pass
-    registry = entrymod.queries()
-    return {
-        key: formatted_plan(registry[key](spark, _GATE_SF))
-        for key in _PLAN_GATE_KEYS
-    }
-
-
 @pytest.mark.parametrize("key", sorted(_PLAN_GATE_KEYS))
-def test_hot_key_plan_shape(gate_plans, key):
-    plan = gate_plans[key]
+def test_hot_key_plan_shape(registry_builds, key):
+    # sf0.001: plan SHAPE is SF-independent for these keys
+    plan = registry_builds.plan(key)
     assert "CartesianProduct" not in plan, f"{key}: cartesian product appeared"
     bnlj = plan.count("BroadcastNestedLoopJoin")
     assert bnlj <= _PLAN_GATE_KEYS[key], (
@@ -1021,16 +995,11 @@ _PUSHDOWN_AUDIT_ALLOW: dict[str, str] = {}
 
 
 @pytest.fixture(scope="module")
-def all_registry_plans(spark):
+def all_registry_plans(registry_builds):
     """Formatted static plans for EVERY registry key at sf0.001 (plan
     shape is SF-independent; builders that run eager probe jobs run
-    them at the tiny SF). Built once per module."""
-    try:
-        entrymod.prebuild_indexes(spark, SF)
-    except Exception:
-        pass
-    registry = entrymod.queries()
-    return {key: formatted_plan(fn(spark, SF)) for key, fn in registry.items()}
+    them at the tiny SF), reusing the parity test's builds."""
+    return {key: registry_builds.plan(key) for key in entrymod.queries()}
 
 
 def test_every_registry_plan_pushes_filters(all_registry_plans):

@@ -106,6 +106,52 @@ def test_lsh_accepts_null_first_vector(spark):
     assert topk(with_null) == expected
 
 
+def test_lsh_never_returns_null_vectors(spark):
+    """A NULL vector has no direction: it is neither a neighbour nor a
+    query. Without the drop it would take sign bit 0 in every table and
+    come back, with a NULL cosine, for any query landing in bucket 0."""
+    schema = "vec_id long, embedding array<float>"
+    queries = spark.createDataFrame(
+        [(i, [1.0, 0.5 * i, -0.25]) for i in range(5)] + [(9, None)],
+        "query_id long, embedding array<float>",
+    )
+    all_null = spark.createDataFrame([(100, None), (101, None)], schema)
+    assert similarity.cosine_topk_lsh(all_null, queries).count() == 0
+    mixed = spark.createDataFrame(
+        [(100, None), (101, None), (20, [0.5, 0.5, 0.5]), (21, [-1.0, 0.0, 2.0])],
+        schema,
+    )
+    out = similarity.cosine_topk_lsh(mixed, queries, k=3, num_planes=1, num_tables=2)
+    rows = out.collect()
+    assert rows
+    assert all(r.cosine_sim is not None for r in rows)
+    assert {r.neighbor_id for r in rows} <= {20, 21}
+    assert 9 not in {r.query_id for r in rows}
+
+
+def test_lsh_oracle_never_returns_null_vectors():
+    """The DuckDB twin drops NULL vectors the same way: adding NULL rows
+    to a corpus too small to fill every top-k leaves the oracle's
+    output unchanged."""
+    import duckdb
+
+    from lab_etl_batch_data_processing_pipeline__spark import oracles
+
+    small = (
+        "SELECT * FROM '/root/testdata/sf0.001/embeddings.parquet' "
+        "WHERE vec_id < 8"
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS {small}")
+    expected = sorted(con.execute(oracles._ANN_LSH_SQL).fetchall())
+    assert expected
+    con.execute(
+        f"CREATE OR REPLACE VIEW embeddings AS {small} "
+        "UNION ALL SELECT 1000 + i, NULL, 0 FROM range(2) t(i)"
+    )
+    assert sorted(con.execute(oracles._ANN_LSH_SQL).fetchall()) == expected
+
+
 @pytest.fixture(scope="module")
 def clustered_vectors(spark):
     # three tight, well-separated clusters; IVF must not lose neighbors

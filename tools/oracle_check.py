@@ -1,8 +1,10 @@
 """Local replica of the driver's correctness gate.
 
-Runs every ``queries()`` entry through Spark and, where an oracle exists,
-through DuckDB on the same parquet tables; compares row count, column
-names, and an order-insensitive value comparison (floats to 1e-9 rel).
+Runs every ``queries()`` entry through Spark and its ``oracle_sql()``
+twin through DuckDB on the same parquet tables; compares column names,
+row count, and an order-insensitive, type-sensitive value comparison
+(floats rounded to 9 decimals). ``duck_views`` and ``compare`` are the
+one comparison the tier-1 parity test runs too.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -73,6 +75,43 @@ def normalize(rows, columns):
     )
 
 
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+)
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(sdf, con: duckdb.DuckDBPyConnection, sql: str) -> tuple[int, list[str]]:
+    """Run a Spark result and its DuckDB oracle and compare them order-
+    insensitively. Returns the Spark row count and the problems found
+    (SCHEMA, ROWS or VALUES); an empty list means they match."""
+    spark_rows = [r.asDict() for r in sdf.collect()]
+    cols = sdf.columns
+    ddf = con.execute(sql).fetch_arrow_table()
+    duck_cols = ddf.column_names
+    duck_rows = ddf.to_pylist()
+    problems = []
+    if sorted(cols) != sorted(duck_cols):
+        problems.append(f"SCHEMA spark={sorted(cols)} duck={sorted(duck_cols)}")
+    if len(spark_rows) != len(duck_rows):
+        problems.append(f"ROWS spark={len(spark_rows)} duck={len(duck_rows)}")
+    if not problems:
+        a = normalize(spark_rows, cols)
+        b = normalize(duck_rows, cols)
+        diff = [(x, y) for x, y in zip(a, b) if x != y]
+        if diff:
+            problems.append(f"VALUES {len(diff)} differ, e.g. {diff[:3]}")
+    return len(spark_rows), problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -88,54 +127,26 @@ def main() -> int:
             .appName("oracle-check-vanilla")
             # UI-only, no query semantics: console progress bars write
             # \r-terminated fragments that splice into the per-key OK
-            # lines when a sweep's output is captured with 2>&1 — the
-            # r12b receipt lost ~30 visually intact lines that way
+            # lines when a sweep's output is captured with 2>&1 (one
+            # captured sweep lost ~30 lines that way)
             .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )
     else:
         spark = get_spark("oracle-check")
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        sdf = fn(spark, sf_dir)
-        spark_rows = [r.asDict() for r in sdf.collect()]
-        cols = sdf.columns
-        if name not in oracles:
-            print(f"{name:28s} rows-only: {len(spark_rows)} rows")
-            continue
-        ddf = con.execute(oracles[name]).fetch_arrow_table()
-        duck_cols = ddf.column_names
-        duck_rows = ddf.to_pylist()
-        status = []
-        if sorted(cols) != sorted(duck_cols):
-            status.append(f"SCHEMA spark={sorted(cols)} duck={sorted(duck_cols)}")
-        if len(spark_rows) != len(duck_rows):
-            status.append(f"ROWS spark={len(spark_rows)} duck={len(duck_rows)}")
-        if not status:
-            a = normalize(spark_rows, cols)
-            b = normalize(duck_rows, cols)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                status.append(f"VALUES {len([1 for x, y in zip(a, b) if x != y])} differ, e.g. {diff}")
-        if status:
-            failures.append(name)
-            print(f"{name:28s} FAIL  {' | '.join(status)}")
-        else:
-            print(f"{name:28s} OK    {len(spark_rows)} rows")
+    with duck_views(sf_dir) as con:
+        for name, fn in entrymod.queries().items():
+            if only and name not in only:
+                continue
+            n_rows, problems = compare(fn(spark, sf_dir), con, oracles[name])
+            if problems:
+                failures.append(name)
+                print(f"{name:28s} FAIL  {' | '.join(problems)}")
+            else:
+                print(f"{name:28s} OK    {n_rows} rows")
     print(f"\n{len(failures)} failures: {failures}")
     return 1 if failures else 0
 
